@@ -223,11 +223,12 @@ object StarSchema {
     *  - new surrogate keys continue after the existing maximum, assigned
     *    by ROW_NUMBER over the business key (total order → deterministic).
     *
-    * Scale: one shuffle joins dim↔snapshot on the business key; the
-    * 1-row max-key aggregate broadcasts; the surrogate window runs only
-    * over NEW rows (a dimension-sized, not fact-sized, set). Historical
-    * (non-current) rows never shuffle — they pass through on a
-    * union branch.
+    * Scale: one shuffle joins the whole dim (history included) to the
+    * snapshot on the business key; the `is_current` join residual
+    * leaves historical rows unmatched, so they exit verbatim through
+    * the untouched branch of a 3-way union over that one joined frame.
+    * The 1-row max-key aggregate broadcasts; the surrogate window runs
+    * only over NEW rows (a dimension-sized, not fact-sized, set).
     */
   def scd2Merge(dim: DataFrame, snapshot: DataFrame, businessKey: Seq[String],
                 attrs: Seq[String], keyName: String, asOf: String): DataFrame = {

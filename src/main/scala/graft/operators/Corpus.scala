@@ -280,11 +280,8 @@ object Corpus {
     val bEmb = bench.select(col("vec_id"), col("embedding"))
     val tPost = Similarity.embeddingPostings(tEmb, bands, rowsPerBand, dims)
     val bPost = Similarity.embeddingPostings(bEmb, bands, rowsPerBand, dims)
-    val contaminated = tPost.as("a")
-      .join(broadcast(bPost.as("b")),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket"))
-      .select(col("a.vec_id").as("vec_id"), col("b.vec_id").as("bench_id"))
-      .distinct()
+    val contaminated = Banding.probe(tPost, bPost, Banding.BandBucket,
+        col("stream.vec_id").as("vec_id"), col("bcast.vec_id").as("bench_id"))
       .join(tEmb.select(col("vec_id"), col("embedding").as("emb_a")), "vec_id")
       .join(broadcast(bEmb.select(col("vec_id").as("bench_id"),
         col("embedding").as("emb_b"))), "bench_id")

@@ -168,15 +168,9 @@ object Dedup {
                    corpusShingles: DataFrame, n: Int = 3,
                    numHashes: Int = 32, bands: Int = 8,
                    minJaccard: Double = 0.5): DataFrame = {
-    val newBanded = bandedBuckets(newDocs, n, numHashes, bands)
-    // batch postings broadcast; the corpus posting frame STREAMS (an
-    // un-hinted join builds on whichever side fits — past the 10 MB
-    // threshold that means shuffling index keys ∝ corpus every batch)
-    val candidates = corpusPostings.as("b")
-      .join(broadcast(newBanded.as("a")),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket"))
-      .select(col("a.doc_id").as("new_id"), col("b.doc_id").as("corpus_id"))
-      .distinct()
+    val (candidates, inBatch) = Banding.batchPairs(
+      bandedBuckets(newDocs, n, numHashes, bands), corpusPostings,
+      Banding.BandBucket, "doc_id")
     val newSh = shingleTable(newDocs, n)
     // candidates (batch × collisions) carry the batch shingle arrays
     // and probe a streaming scan of the corpus shingle frame — the
@@ -194,38 +188,18 @@ object Dedup {
       .filter(graft.functions.GraftFunctions.sortedArrayJaccard(
         col("sh_a"), col("sh_b")) >= minJaccard)
       .select(col("new_id").as("doc_id")).distinct()
-    // batch-internal pairs mined over the SAME banded/shingle subtrees
-    // the corpus probe built (identical subtrees → one computation /
-    // ReusedExchange), not a second minhashLsh pass over the batch.
-    //
-    // BOUND: this self-join's fan-out is bucket_occupancy² per
-    // (band, bucket), and occupancy is capped by the BATCH size — the
-    // corpus never enters it — so at the micro-batch scale this
-    // operator is deployed at ([[graft.streaming.NearDupIndex]]), a
-    // hot bucket costs at most |batch|² shingle verifies. Do NOT feed
-    // a backfill-sized "batch" through the probe: a million identical
-    // re-crawls in one call is 10^12 candidate pairs. Backfills go
-    // through [[minhashLsh]]+[[exact]] (whose hot-bucket behavior is
-    // the one-shot family's documented trade) or are chunked into
-    // real micro-batches, where the sequential index probe drops each
-    // chunk's dupes against the grown index for |chunk|²-bounded
-    // work. DedupSpec pins the wrapper parity that makes chunking
-    // safe (a near-dup of a dropped doc is still dropped).
-    val inBatchDropped = newBanded.as("a")
-      .join(newBanded.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
+    // in-batch pairs verify over the same batch shingle subtree; the
+    // |batch|² hot-bucket bound is Banding.batchPairs' — deployed at
+    // micro-batch scale by [[graft.streaming.NearDupIndex]], backfills
+    // go through [[minhashLsh]]+[[exact]] or are chunked (DedupSpec
+    // pins the wrapper parity that makes chunking safe)
+    val inBatchDropped = inBatch
       .join(newSh.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), "id_a")
       .join(newSh.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), "id_b")
       .filter(graft.functions.GraftFunctions.sortedArrayJaccard(
         col("sh_a"), col("sh_b")) >= minJaccard)
       .select(col("id_b").as("doc_id")).distinct()
-    newDocs.select(col("doc_id"))
-      .join(matched, Seq("doc_id"), "left_anti")
-      .join(inBatchDropped, Seq("doc_id"), "left_anti")
-      .orderBy("doc_id")
+    Banding.keep(newDocs, "doc_id", matched, inBatchDropped)
   }
 
   /** Cross-document duplicate text SPANS at a fixed token k-gram grain
@@ -574,9 +548,8 @@ object Dedup {
     // only the shingles ABOVE the cut (a stopword-sized set, tiny by
     // construction) broadcast into an anti-join, so hot postings are
     // dropped at the map side and never shuffle at all. The rare-only
-    // posting lists then self-join with bounded (≤ maxDf) key fan-out,
-    // and both sides are identical subtrees so ReusedExchange computes
-    // them once.
+    // posting lists then self-join ([[Banding.selfJoin]]) with bounded
+    // (≤ maxDf) key fan-out.
     val hot = posts.groupBy("shingle")
       .agg(count(lit(1)).as("df"))
       .filter(col("df") > maxDf)
@@ -588,37 +561,13 @@ object Dedup {
         val t = lit(minSizeRatio * (1 - 1e-9))
         col("a.sz") >= col("b.sz") * t && col("b.sz") >= col("a.sz") * t
       }
-    // SHUFFLE_HASH, not planner's choice: at small SF AQE "optimizes"
-    // this self-join into a broadcast — which COMPUTES THE POSTINGS
-    // SUBTREE TWICE (scan + segmentation + shingle hashing per side)
-    // and builds a postings-sized broadcast, where the hinted shuffle
-    // join's two sides are one ReusedExchange: the subtree runs once
-    // and only 8 B/posting shuffles (measured at sf0.1: the broadcast
-    // plan repeated the 260k-posting generate on both sides). At
-    // large SF the hint is what the planner picks anyway (postings
-    // outgrow any broadcast), so the plan is now scale-invariant.
-    rare.as("a")
-      .join(rare.hint("shuffle_hash").as("b"),
-        col("a.shingle") === col("b.shingle") &&
+    Banding.selfJoin(rare, Seq("shingle"),
         col("a.doc_id") < col("b.doc_id") && szBound)
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("inter"),
         min(col("a.sz")).as("sz_a"), min(col("b.sz")).as("sz_b"))
   }
 
-  /** MinHash + LSH near-duplicate pairs, Jaccard-verified.
-    *
-    * k-hash signature per doc, split into `bands`; docs colliding on any
-    * band's hash become candidates (groupBy-join on the band bucket, so
-    * work is proportional to collisions, not n²). Candidates are then
-    * verified with exact Jaccard on sorted 62-bit shingle-HASH arrays
-    * ([[shingleTable]]'s representation — 8 B/shingle on the shuffle
-    * where string arrays measured 2371 s of spill at sf10), so
-    * precision is exact on the hashed shingle sets (string parity
-    * barring a ~2^-62 collision) and only recall is probabilistic
-    * (≥ 1-(1-s^r)^b; at the default 8 bands × 4 rows and s=0.9 that
-    * is 1 - 4e-8).
-    */
   /** (doc_id, band, bucket) LSH postings — the document's signature
     * from the native MinHashSig kernel (one codegen'd projection over
     * the scan; null = no shingles, dropped), each band folded to a
@@ -663,37 +612,24 @@ object Dedup {
       .select(col("doc_id"), col("bb.band"), col("bb.bucket"))
   }
 
+  /** MinHash + LSH near-duplicate pairs, Jaccard-verified.
+    *
+    * k-hash signature per doc, split into `bands`; docs colliding on any
+    * band's hash become candidates ([[Banding.pairs]] on the band
+    * bucket, so work is proportional to collisions, not n²; the hint
+    * and the hot-bucket skew bound are documented there). Candidates
+    * are then verified with exact Jaccard on sorted 62-bit shingle-HASH
+    * arrays ([[shingleTable]]'s representation — 8 B/shingle on the
+    * shuffle where string arrays measured 2371 s of spill at sf10), so
+    * precision is exact on the hashed shingle sets (string parity
+    * barring a ~2^-62 collision) and only recall is probabilistic
+    * (≥ 1-(1-s^r)^b; at the default 8 bands × 4 rows and s=0.9 that
+    * is 1 - 4e-8).
+    */
   def minhashLsh(docs: DataFrame, n: Int = 3, numHashes: Int = 32,
                  bands: Int = 8, minJaccard: Double = 0.5): DataFrame = {
-    val banded = bandedBuckets(docs, n, numHashes, bands)
-    // shuffle_hash for the same reason as rarePairs' self-join: left
-    // to AQE, small-SF plans broadcast one side and COMPUTE THE
-    // SIGNATURE SUBTREE TWICE (scan + segmentation + 32-hash MinHash
-    // per doc, per side); the hinted shuffle join reuses ONE exchange
-    // of 20-byte (doc, band, bucket) rows — and is what the planner
-    // picks at scale anyway, so the plan no longer changes shape
-    // across SF.
-    //
-    // Build-side skew bound (VERDICT r15 watch item): a degenerate hot
-    // bucket — a boilerplate doc duplicated D× puts D postings into
-    // ONE (band, bucket) key — lands D build rows (~24 B each) in one
-    // task's hash map where sort-merge would spill. That map is O(D)
-    // while the join's OUTPUT for that bucket is O(D²) pairs, which no
-    // strategy avoids (the pairs ARE the query's answer): by the time
-    // the build map pressures executor memory (D ≈ 10⁸ → ~2.4 GB) the
-    // output is ~10¹⁶ pairs, far past any engine's budget — the join
-    // strategy is never the binding constraint, upstream exact-dedup /
-    // curation is. Below that, bucket density tracks TRUE duplication,
-    // not corpus size (MEASURED, LSH_SCALE.md: candidates == verified
-    // pairs at sf0.1 and sf1). DedupSpec pins the worst case the
-    // banding admits: one doc duplicated 600×, every posting in one
-    // bucket per band, plan stays SHJ, exact D·(D−1)/2 output.
-    val candidates = banded.as("a")
-      .join(banded.hint("shuffle_hash").as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
+    val candidates = Banding.pairs(bandedBuckets(docs, n, numHashes, bands),
+      Banding.BandBucket, "doc_id", "doc_a", "doc_b")
     val sh = shingleTable(docs, n)
     candidates
       .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
@@ -732,18 +668,8 @@ object Dedup {
             .bitwiseAND(lit((1L << bits) - 1)).as("key"))))
         .as("bk"))
       .select(col("doc_id"), col("sig"), col("bk.block"), col("bk.key"))
-    // shuffle_hash: same scale-invariant-plan rationale as minhashLsh
-    // (broadcast would recompute the SimHash signature subtree per
-    // side), and the same O(D) build / O(D²) unavoidable-output skew
-    // bound — see the minhashLsh comment; DedupSpec pins the
-    // degenerate single-bucket corpus through both operators.
-    blocked.as("a")
-      .join(blocked.hint("shuffle_hash").as("b"),
-        col("a.block") === col("b.block") && col("a.key") === col("b.key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
+    Banding.pairs(blocked, Seq("block", "key"), "doc_id", "doc_a", "doc_b",
         bit_count(col("a.sig").bitwiseXOR(col("b.sig"))).as("hamming"))
-      .distinct()
       .filter(col("hamming") <= maxHamming)
   }
 }

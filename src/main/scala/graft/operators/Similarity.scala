@@ -579,15 +579,8 @@ object Similarity {
       dot(col("embedding"), typedlit(hyperplane(b * r).toSeq)).as("proj"),
       explode(bandStructs(b, r, 64)).as("bb"))
       .select(col("vec_id"), col("proj"), col("bb.band"), col("bb.bucket"))
-    // shuffle_hash (r15): left to AQE, the small-SF plan broadcasts
-    // one side and computes the banded-projection subtree TWICE
-    // (8·r hyperplane dot products per vector, per side); the hinted
-    // shuffle join reuses ONE exchange of the 28-byte posting rows —
-    // the shape the planner picks at scale anyway (measured at sf0.1:
-    // the broadcast plan repeated the 16k-posting generate per side).
-    val directed = banded.as("a").join(banded.hint("shuffle_hash").as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") =!= col("b.vec_id"))
+    val directed = Banding.selfJoin(banded, Banding.BandBucket,
+        col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.vec_id").as("vec_id"), col("b.vec_id").as("neighbor_id"),
         col("a.band").as("band"),
         abs(col("a.proj") - col("b.proj")).as("proj_dist"))
@@ -647,10 +640,6 @@ object Similarity {
                        dims: Int = 64): DataFrame =
     nearDupPairs(corpus, minCosine, bands, rowsPerBand, dims)
 
-  /** [[embeddingNearDup]] without the hash-stability output sort —
-    * the form graph consumers (connected components, kNN ranking)
-    * compose with, since they re-shuffle anyway.
-    */
   /** (vec_id, band, bucket) sign-bit LSH postings — bucket = the
     * band's sign bits against the deterministic [[hyperplane]]s packed
     * into an integer (exact bucket identity — a hash here would only
@@ -688,21 +677,18 @@ object Similarity {
               .cast("long") * (1L << i)
         }.reduce(_ + _).as("bucket"))): _*)
 
+  /** [[embeddingNearDup]] without the hash-stability output sort —
+    * the form graph consumers (connected components, kNN ranking)
+    * compose with, since they re-shuffle anyway. Candidates are the
+    * [[Banding.pairs]] of the [[embeddingPostings]].
+    */
   def nearDupPairs(corpus: DataFrame, minCosine: Double = 0.35,
                    bands: Int = AutoBands, rowsPerBand: Int = AutoWidth,
                    dims: Int = 64): DataFrame = {
     val emb = corpus.select(col("vec_id"), col("embedding"))
     val (b, r) = resolveGeometry(emb, bands, rowsPerBand, minCosine)
-    val banded = embeddingPostings(emb, b, r, dims)
-    // shuffle_hash: same scale-invariant-plan rationale as knnPairs —
-    // never recompute the banding subtree per join side
-    val candidates = banded.as("a")
-      .join(banded.hint("shuffle_hash").as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
-      .distinct()
-    candidates
+    Banding.pairs(embeddingPostings(emb, b, r, dims), Banding.BandBucket,
+        "vec_id", "vec_a", "vec_b")
       .join(emb.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a")),
         "vec_a")
       .join(emb.select(col("vec_id").as("vec_b"), col("embedding").as("emb_b")),
@@ -712,6 +698,30 @@ object Similarity {
       .filter(col("cos_sim") >= minCosine)
       .select(col("vec_a"), col("vec_b"), round(col("cos_sim"), 4).as("cos_sim"))
   }
+
+  /** The [[Banding.batchPairs]] of a vector batch against stored
+    * postings — the shared mining step of [[embeddingProbe]] and
+    * [[pqEmbeddingProbe]], so the two verify paths (exact cosine vs
+    * ADC) can never diverge on WHICH pairs they verify: (new_id,
+    * corpus_id) index candidates, and in-batch (id_a < id_b) pairs with
+    * both embeddings attached (emb_a/emb_b). The caller applies its
+    * verify predicate and drops id_b (greedy min-id keeper).
+    */
+  private def probeCandidates(newEmb: DataFrame, corpusPostings: DataFrame,
+                              bands: Int, rowsPerBand: Int,
+                              dims: Int): (DataFrame, DataFrame) = {
+    val (candidates, inBatch) = Banding.batchPairs(
+      embeddingPostings(newEmb, bands, rowsPerBand, dims), corpusPostings,
+      Banding.BandBucket, "vec_id")
+    (candidates, inBatch
+      .join(newEmb.select(col("vec_id").as("id_a"),
+        col("embedding").as("emb_a")), "id_a")
+      .join(newEmb.select(col("vec_id").as("id_b"),
+        col("embedding").as("emb_b")), "id_b"))
+  }
+
+  private def guardedProbeSide(df: DataFrame): DataFrame =
+    graft.core.ProbeGuard.guarded(df)
 
   /** Incremental-append EMBEDDING near-dup scrub against a PERSISTED
     * corpus index — the [[graft.operators.Dedup.minhashProbe]]
@@ -730,50 +740,13 @@ object Similarity {
     * corpus size. Precision is exact (native cosine per candidate);
     * only recall is probabilistic, same curve as [[nearDupPairs]].
     */
-  /** (new_id, corpus_id) bucket-collision candidate pairs — the
-    * shared mining step of [[embeddingProbe]] and
-    * [[pqEmbeddingProbe]], so the two verify paths (exact cosine vs
-    * ADC) can never diverge on WHICH pairs they verify.
-    */
-  private def bandedCandidates(newBanded: DataFrame,
-                               corpusPostings: DataFrame): DataFrame =
-    // batch postings broadcast; the stored posting frame STREAMS —
-    // an un-hinted join would shuffle index keys ∝ corpus once the
-    // frame outgrows the auto-broadcast threshold (INDEX_SCALE.md)
-    corpusPostings.as("b")
-      .join(broadcast(newBanded.as("a")),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket"))
-      .select(col("a.vec_id").as("new_id"), col("b.vec_id").as("corpus_id"))
-      .distinct()
-
-  /** Batch-internal candidate pairs with both embeddings attached
-    * (id_a < id_b, emb_a/emb_b) — shared by both probes; mined over
-    * the SAME banded subtree the corpus probe built (identical
-    * subtrees → ReusedExchange). The caller applies its verify
-    * predicate and drops id_b (greedy min-id keeper).
-    */
-  private def inBatchPairs(newBanded: DataFrame,
-                           newEmb: DataFrame): DataFrame =
-    newBanded.as("a")
-      .join(newBanded.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
-      .distinct()
-      .join(newEmb.select(col("vec_id").as("id_a"),
-        col("embedding").as("emb_a")), "id_a")
-      .join(newEmb.select(col("vec_id").as("id_b"),
-        col("embedding").as("emb_b")), "id_b")
-
-  private def guardedProbeSide(df: DataFrame): DataFrame =
-    graft.core.ProbeGuard.guarded(df)
-
   def embeddingProbe(newVecs: DataFrame, corpusPostings: DataFrame,
                      corpusVectors: DataFrame, minCosine: Double = 0.35,
                      bands: Int, rowsPerBand: Int,
                      dims: Int = 64): DataFrame = {
     val newEmb = newVecs.select(col("vec_id"), col("embedding"))
-    val newBanded = embeddingPostings(newEmb, bands, rowsPerBand, dims)
+    val (candidates, inBatch) =
+      probeCandidates(newEmb, corpusPostings, bands, rowsPerBand, dims)
     // candidates + batch vectors probe a streaming scan of the stored
     // vector frame — the verify-side index never shuffles. Whether the
     // probe side BROADCASTS (the flat-cost fast path) or shuffle-hashes
@@ -781,18 +754,15 @@ object Similarity {
     // its measured row count — see guardedProbeSide.
     val matched = corpusVectors
       .select(col("vec_id").as("corpus_id"), col("embedding").as("emb_b"))
-      .join(guardedProbeSide(bandedCandidates(newBanded, corpusPostings)
+      .join(guardedProbeSide(candidates
         .join(newEmb.select(col("vec_id").as("new_id"),
           col("embedding").as("emb_a")), "new_id")), "corpus_id")
       .filter(cosine(col("emb_a"), col("emb_b")) >= minCosine)
       .select(col("new_id").as("vec_id")).distinct()
-    val inBatchDropped = inBatchPairs(newBanded, newEmb)
+    val inBatchDropped = inBatch
       .filter(cosine(col("emb_a"), col("emb_b")) >= minCosine)
       .select(col("id_b").as("vec_id")).distinct()
-    newVecs.select(col("vec_id"))
-      .join(matched, Seq("vec_id"), "left_anti")
-      .join(inBatchDropped, Seq("vec_id"), "left_anti")
-      .orderBy("vec_id")
+    Banding.keep(newVecs, "vec_id", matched, inBatchDropped)
   }
 
   /** [[embeddingProbe]] with the corpus index derived inline — fine
@@ -841,11 +811,12 @@ object Similarity {
                        maxD2: Double, bands: Int, rowsPerBand: Int,
                        dims: Int = 64, m: Int = 8): DataFrame = {
     val newEmb = newVecs.select(col("vec_id"), col("embedding"))
-    val newBanded = embeddingPostings(newEmb, bands, rowsPerBand, dims)
+    val (mined, inBatch) =
+      probeCandidates(newEmb, corpusPostings, bands, rowsPerBand, dims)
     // guarded once: the pinned frame feeds both the dtab semi-join and
     // the code-frame probe (broadcast below threshold, shuffle_hash
     // fail-soft above — see graft.core.ProbeGuard)
-    val candidates = guardedProbeSide(bandedCandidates(newBanded, corpusPostings))
+    val candidates = guardedProbeSide(mined)
     // ADC distance table restricted to batch vectors that actually
     // collided (semi-join first): its size is |colliding vectors|·m·k,
     // NOT |batch|·m·k — a giant backfill batch with few collisions
@@ -873,13 +844,10 @@ object Similarity {
       .select(col("new_id").as("vec_id")).distinct()
     // in-batch pairs verify with the exact codegen distance — both
     // sides are full precision, no reason to quantize them
-    val inBatchDropped = inBatchPairs(newBanded, newEmb)
+    val inBatchDropped = inBatch
       .filter(sqDist(col("emb_a"), col("emb_b")) <= maxD2)
       .select(col("id_b").as("vec_id")).distinct()
-    newVecs.select(col("vec_id"))
-      .join(matched, Seq("vec_id"), "left_anti")
-      .join(inBatchDropped, Seq("vec_id"), "left_anti")
-      .orderBy("vec_id")
+    Banding.keep(newVecs, "vec_id", matched, inBatchDropped)
   }
 
   // ---------------------------------------------------------------- PQ

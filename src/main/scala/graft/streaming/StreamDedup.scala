@@ -507,7 +507,7 @@ class NearDupIndex(protected val spark: SparkSession, dir: String, n: Int = 3,
 
   /** Dedup-and-index a STATIC corpus in bounded slices
     * ([[StreamDedup.chunkedBackfill]]) — the guard the
-    * [[graft.operators.Dedup.minhashProbe]] giant-batch note demands:
+    * [[graft.operators.Banding.batchPairs]] giant-batch note demands:
     * in-batch verify fan-out is bucket-occupancy² with occupancy
     * capped by the SLICE size. On clique-shaped duplicate clusters
     * this equals the one-shot accept for ANY chunk count

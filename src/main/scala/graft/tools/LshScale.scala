@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Similarity, TextOps}
+import graft.operators.{Banding, Dedup, Similarity, TextOps}
 
 /** Dense-regime LSH measurement: executes the cluster-scale band
   * parameters the Scaladoc prescribes (MinHash rows/band ≥ 16,
@@ -121,10 +121,8 @@ object LshScale {
       val postingsRows = banded.count()
       val bucketPairs = banded.groupBy("band", "bucket").count()
         .agg(sum(expr("count*(count-1)/2")).cast("long")).head().getLong(0)
-      val candidates = banded.as("a").join(banded.as("b"),
-          col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id"), col("b.doc_id")).distinct().count()
+      val candidates = Banding.pairs(banded, Banding.BandBucket,
+        "doc_id", "doc_a", "doc_b").count()
       // full query end-to-end, shuffle-measured
       val ((nFound, nPlantedFound), shufFull, secs) = measured {
         val f = Dedup.minhashLsh(docs, 3, nh, bands, minJ)
@@ -160,10 +158,8 @@ object LshScale {
       val postingsRows = banded.count()
       val bucketPairs = banded.groupBy("band", "bucket").count()
         .agg(sum(expr("count*(count-1)/2")).cast("long")).head().getLong(0)
-      val candidates = banded.as("a").join(banded.as("b"),
-          col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-            col("a.vec_id") < col("b.vec_id"))
-        .select(col("a.vec_id"), col("b.vec_id")).distinct().count()
+      val candidates = Banding.pairs(banded, Banding.BandBucket,
+        "vec_id", "vec_a", "vec_b").count()
       val ((nFound, nPlantedFound), shufFull, secs) = measured {
         val f = (if (useDefault) Similarity.nearDupPairs(emb, minCos, bands)
                  else Similarity.nearDupPairs(emb, minCos, bands, r))

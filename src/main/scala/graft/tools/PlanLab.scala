@@ -10,9 +10,12 @@ object PlanLab {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSet else Set.empty[String]
+    // one task slot and one shuffle partition per available core, the
+    // sizing the benchmark harness uses
+    val cores = Runtime.getRuntime.availableProcessors
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -20,10 +23,11 @@ object PlanLab {
     spark.sparkContext.setLogLevel("WARN")
     // the materialized-mart read twins (q1m..q5m) live outside
     // SparkEntry.queries (Bench builds them around an untimed
-    // materialize); mirror that here so their plans are dumpable too
+    // materialize); mirror that here so their plans are dumpable too,
+    // both when named and in dump-all mode (no names given)
     val martNames = (1 to 5).map(i => s"q${i}m").toSet
     val martQs: Seq[(String, org.apache.spark.sql.DataFrame)] =
-      if (names.intersect(martNames).isEmpty) Seq.empty
+      if (names.nonEmpty && names.intersect(martNames).isEmpty) Seq.empty
       else {
         val martDir =
           System.getProperty("java.io.tmpdir") + "/graft_planlab_mart"

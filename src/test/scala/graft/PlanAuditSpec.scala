@@ -170,7 +170,8 @@ class PlanAuditSpec extends SparkSpec {
       Seq(
         Dedup.minhashLsh(graft.core.Tables(spark, sf(), "documents")),
         Dedup.simhash(graft.core.Tables(spark, sf(), "documents")),
-        Similarity.embeddingNearDup(graft.core.Tables(spark, sf(), "embeddings"))
+        Similarity.embeddingNearDup(graft.core.Tables(spark, sf(), "embeddings")),
+        Similarity.knnGraph(graft.core.Tables(spark, sf(), "embeddings"), bands = 8)
       ).foreach { df =>
         val plan = finalPlan(df)
         assert(plan.contains("ReusedExchange"),

@@ -330,18 +330,18 @@ class DedupSpec extends SparkSpec {
 
   test("degenerate hot bucket: one boilerplate doc duplicated 600x — the " +
        "hinted shuffled-hash self-joins survive and find every pair") {
-    // VERDICT r15 watch item: minhashLsh/simhash force a shuffled hash
-    // join, whose build side holds a whole (band, bucket) posting list
-    // in one task's hash map. The degenerate corpus — one boilerplate
-    // doc duplicated D times — puts all D postings of every band into
-    // ONE bucket, the worst case the banding admits. The bound
-    // argument (see the minhashLsh scaladoc) is that build memory is
-    // O(D) while the join's unavoidable OUTPUT is O(D²), so the build
-    // map can never be the binding constraint; this pins the plan
-    // (hint engaged, not silently broadcast) and the exact D·(D−1)/2
-    // output at a D large enough that a per-bucket quadratic blowup
-    // would be visible.
-    import org.apache.spark.sql.functions.{col, lit}
+    // VERDICT r15 watch item: every Banding self-join forces a shuffled
+    // hash join, whose build side holds a whole (band, bucket) posting
+    // list in one task's hash map. The degenerate corpus — one
+    // boilerplate doc (or vector) duplicated D times — puts all D
+    // postings of every band into ONE bucket, the worst case the
+    // banding admits. The bound argument (see the Banding scaladoc) is
+    // that build memory is O(D) while the join's unavoidable OUTPUT is
+    // O(D²), so the build map can never be the binding constraint;
+    // this pins the plan (hint engaged, not silently broadcast) and the
+    // exact output at a D large enough that a per-bucket quadratic
+    // blowup would be visible.
+    import org.apache.spark.sql.functions.{col, lit, typedLit}
     val d = 600L
     val boiler = (1 to 30).map(i => s"plate$i").mkString(" ")
     val dup = spark.range(d)
@@ -359,6 +359,25 @@ class DedupSpec extends SparkSpec {
     val shPlan = sh.queryExecution.executedPlan.toString
     assert(shPlan.contains("ShuffledHashJoin"),
       s"blocked self-join must stay a shuffled hash join:\n$shPlan")
+
+    // the embedding-side callers at the gate's 8 bands: D identical
+    // vectors share every band's bucket. nearDupPairs finds all
+    // D·(D−1)/2 pairs; the kNN graph keeps exactly k of the D−1
+    // equally-near neighbors each.
+    val vecs = spark.range(d).select(col("id").as("vec_id"),
+      typedLit((1 to 64).map(i => (i % 7 - 3).toFloat)).as("embedding"))
+    val nd = Similarity.nearDupPairs(vecs, bands = 8)
+    assert(nd.count() == expect)
+    val ndPlan = nd.queryExecution.executedPlan.toString
+    assert(ndPlan.contains("ShuffledHashJoin"),
+      s"sign-LSH self-join must stay a shuffled hash join:\n$ndPlan")
+
+    val k = 5
+    val knn = Similarity.knnGraph(vecs, k, bands = 8)
+    assert(knn.count() == d * k)
+    val knnPlan = knn.queryExecution.executedPlan.toString
+    assert(knnPlan.contains("ShuffledHashJoin"),
+      s"kNN mining self-join must stay a shuffled hash join:\n$knnPlan")
   }
 
   test("exactProbe matches incremental's keeper/anti-join semantics on a " +

@@ -35,6 +35,9 @@ rep0 = syn[syn.doc_id < K].sort_values("doc_id").reset_index(drop=True)
 # the replica-0 block stays byte-identical (planted ids only exist at
 # rep >= 1, and 10^7 is far above any real source doc_id).
 PAIR_BASE = 10_000_000
+assert src.doc_id.max() < PAIR_BASE, \
+    f"source doc_id {src.doc_id.max()} reaches the planted-pair id base " \
+    f"{PAIR_BASE}: real rows would be classified as planted"
 planted = syn[(syn.doc_id % K) >= PAIR_BASE]
 expected_planted = 20 * (factor - 1) * 2
 

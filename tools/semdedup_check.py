@@ -39,10 +39,14 @@ sql = json.load(open(f"{outdir}/oracle_sql.json"))["semdedup"]
 # geometry silently diverges the replay the moment the width rule
 # resolves differently, which is exactly what r16 found when this tool
 # was first re-run post-r12).
-BANDS = max(int(b) for b in re.findall(r"(\d+) AS band", sql)) + 1
+band_ids = re.findall(r"(\d+) AS band", sql)
+BANDS = max(int(b) for b in band_ids) + 1
 all_planes = re.findall(r"list_dot_product\(emb, (\[[^\]]*\])", sql)
 # embeddingNearDupBody is inlined twice (src->dst and dst->src); the
 # first half is one full band-major, row-minor plane set.
+assert len(band_ids) == 2 * BANDS, \
+    f"{len(band_ids)} band literals, expected 2*{BANDS}: the near-dup " \
+    "body is no longer inlined exactly twice"
 assert len(all_planes) % (2 * BANDS) == 0, \
     f"{len(all_planes)} plane literals not divisible by 2*{BANDS} bands"
 ROWS = (len(all_planes) // 2) // BANDS
