@@ -32,27 +32,6 @@ object StarSchema {
       weekofyear(col("date_key")).cast("long").as("week_of_year"),
       dayofyear(col("date_key")).cast("long").as("day_of_year"))
 
-  /** Global dense row numbering WITHOUT an unpartitioned window.
-    *
-    * `ROW_NUMBER() OVER (ORDER BY …)` funnels the whole input through a
-    * single task — fine for a 5-row dim, fatal for a billion-row entity
-    * table. This produces bit-identical ranks scalably:
-    *
-    *  1. bucket each row by an order-preserving, DETERMINISTIC function
-    *     of the first order column (numeric → fixed-width buckets from
-    *     exact min/max; string → first-character bucket). No sampling
-    *     (unlike `repartitionByRange`), so every subtree that recomputes
-    *     the bucketing agrees on it;
-    *  2. ROW_NUMBER within each bucket (a partitioned window — parallel);
-    *  3. per-bucket counts → cumulative offsets via a tiny
-    *     buckets×buckets self-join (≤ a few hundred rows — broadcast);
-    *  4. rank = offset + local row number.
-    *
-    * Buckets are order-preserving, so offset+local == the global
-    * ROW_NUMBER under the same total order. Width buckets can skew
-    * (bounded by buckets× the average for id-like keys); that trades a
-    * bounded imbalance for determinism and zero driver collection.
-    */
   /** Order-preserving deterministic bucketing on the first order column
     * (shared by [[globalRank]] and [[globalPrefixSum]]): numeric →
     * fixed-width buckets from exact min/max; string → first-character
@@ -123,6 +102,27 @@ object StarSchema {
       .drop("__bkt", "__loc", "__off")
   }
 
+  /** Global dense row numbering WITHOUT an unpartitioned window.
+    *
+    * `ROW_NUMBER() OVER (ORDER BY …)` funnels the whole input through a
+    * single task — fine for a 5-row dim, fatal for a billion-row entity
+    * table. This produces bit-identical ranks scalably:
+    *
+    *  1. bucket each row by an order-preserving, DETERMINISTIC function
+    *     of the first order column (numeric → fixed-width buckets from
+    *     exact min/max; string → first-character bucket). No sampling
+    *     (unlike `repartitionByRange`), so every subtree that recomputes
+    *     the bucketing agrees on it;
+    *  2. ROW_NUMBER within each bucket (a partitioned window — parallel);
+    *  3. per-bucket counts → cumulative offsets via a tiny
+    *     buckets×buckets self-join (≤ a few hundred rows — broadcast);
+    *  4. rank = offset + local row number.
+    *
+    * Buckets are order-preserving, so offset+local == the global
+    * ROW_NUMBER under the same total order. Width buckets can skew
+    * (bounded by buckets× the average for id-like keys); that trades a
+    * bounded imbalance for determinism and zero driver collection.
+    */
   def globalRank(src: DataFrame, orderBy: Seq[String], keyName: String,
                  buckets: Int = 64): DataFrame =
     bucketedTwoPhase(src, orderBy, buckets, keyName)(

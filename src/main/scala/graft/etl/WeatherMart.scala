@@ -16,10 +16,15 @@ import org.apache.spark.sql.functions._
   *   band measure             -> l_quantity (integral, so the reference's
   *                               inclusive BETWEEN banding stays gap-free)
   *
-  * Star-join strategy at scale: every dimension is broadcast — the fact
-  * (lineitem) side never shuffles for the join. The only wide exchange in
-  * the whole mart build is the window partition by location_key, which both
-  * window metrics share.
+  * Star-join strategy at scale: the fact (lineitem) side never shuffles
+  * for a join. The location and source dimensions are broadcast; the date
+  * dimension is not joined at all, since its key is the staging date
+  * itself (see [[factFrame]]). The only wide exchange in the fact build is
+  * the window partition by location_key, which both window metrics share.
+  *
+  * Builders that [[Mart.materialize]] shares take their upstream frames
+  * (a frame-taking core) plus a thin `(spark, dir)` wrapper that derives
+  * them inline — the shape [[Dashboard]] uses.
   */
 object WeatherMart {
 
@@ -176,21 +181,14 @@ object WeatherMart {
   /** Normalized 3NF location table (reference NORMALIZED.LOCATION,
     * ETL_GlobalWeather_DB.sql:150-152).
     */
-  def normalizedLocation(spark: SparkSession, dir: String): DataFrame =
-    dimLocation(spark, dir)
+  def normalizedLocation(dimLocation: DataFrame): DataFrame =
+    dimLocation
       .select("postal_code", "city_name", "country", "region_name")
       .orderBy("postal_code")
 
-  /** Fact build (reference FACT_WEATHER_DAY, ETL_GlobalWeather_DB.sql
-    * §3.4): star join + LAG day-delta + 7-row rolling sum.
-    *
-    * Differences from the reference, by design:
-    *  - band/precip classifications are inlined CASE expressions
-    *    (codegen) rather than joins back to 5-row dimensions;
-    *  - window order is total (date, orderkey, linenumber) — the
-    *    reference orders by date alone, which is nondeterministic when a
-    *    location has several rows per day.
-    */
+  def normalizedLocation(spark: SparkSession, dir: String): DataFrame =
+    normalizedLocation(dimLocation(spark, dir))
+
   /** The fact frame BEFORE the window metrics: star join + inline
     * classifications. Shared by [[fact]] (single-pass metrics),
     * [[factWindowForm]] (the declarative Window twin the parity spec
@@ -199,19 +197,27 @@ object WeatherMart {
     * were a Window node Catalyst pruned them implicitly; the
     * RunningWindow boundary makes that pruning an explicit call-site
     * choice, see Dashboard's note).
+    *
+    * The date dimension is not joined: `date_key = date_valid` for
+    * every row with a non-null date. This is exact, not an
+    * approximation. [[dimDate]] is `distinct(to_date(date_valid))` over
+    * the same staging rows and `date_valid` is already a DATE, so each
+    * non-null date matches exactly one dimension row (no fan-out, no
+    * loss) and the inner join could only drop NULL dates. The join
+    * would cost a second lineitem scan and a distinct per build, and
+    * Catalyst cannot prove it a no-op itself. The DuckDB `factSql` oracle
+    * also states the fact without a date join.
     */
-  private[graft] def factFrame(spark: SparkSession, dir: String): DataFrame = {
-    val stg = staging(spark, dir)
-    val dd = dimDate(spark, dir).select("date_key")
-    val dl = dimLocation(spark, dir)
+  private[graft] def factFrame(staging: DataFrame, dimLocation: DataFrame): DataFrame = {
+    val dl = dimLocation
       .filter(col("is_current"))
       .select("location_key", "postal_code")
-    stg
-      .join(broadcast(dd), stg("date_valid") === dd("date_key"))
-      .join(broadcast(dl), stg("loc_ref") === dl("postal_code"))
-      .crossJoin(broadcast(dimSource(spark).select("source_key")))
+    staging
+      .filter(col("date_valid").isNotNull)
+      .join(broadcast(dl), staging("loc_ref") === dl("postal_code"))
+      .crossJoin(broadcast(dimSource(staging.sparkSession).select("source_key")))
       .select(
-        col("date_key"), col("location_key"),
+        col("date_valid").as("date_key"), col("location_key"),
         weatherBand(col("band_q")).as("weather_band"),
         precipitationType(col("snowfall_in"), col("precipitation_in"))
           .as("precipitation_type"),
@@ -219,6 +225,9 @@ object WeatherMart {
         col("l_orderkey"), col("l_linenumber"),
         col("avg_temp_f"), col("precipitation_in"), col("snowfall_in"))
   }
+
+  private[graft] def factFrame(spark: SparkSession, dir: String): DataFrame =
+    factFrame(staging(spark, dir), dimLocation(spark, dir))
 
   /** (date, orderkey, linenumber) alone is NOT total: the generator can
     * emit two lines with the same order/line number for one supplier+day
@@ -231,11 +240,26 @@ object WeatherMart {
     col("l_linenumber"), col("avg_temp_f"), col("precipitation_in"),
     col("snowfall_in"), col("weather_band"))
 
-  def fact(spark: SparkSession, dir: String): DataFrame =
+  /** Fact build (reference FACT_WEATHER_DAY, ETL_GlobalWeather_DB.sql
+    * §3.4): star join + LAG day-delta + 7-row rolling sum.
+    *
+    * Differences from the reference, by design:
+    *  - band/precip classifications are inlined CASE expressions
+    *    (codegen) rather than joins back to 5-row dimensions;
+    *  - the date dimension join is the equivalent not-null filter
+    *    (see [[factFrame]]);
+    *  - window order is total (date, orderkey, linenumber) — the
+    *    reference orders by date alone, which is nondeterministic when a
+    *    location has several rows per day.
+    */
+  def fact(staging: DataFrame, dimLocation: DataFrame): DataFrame =
     graft.plans.RunningWindow.lagDeltaAndRollingSum(
-      factFrame(spark, dir), "location_key", factOrder,
+      factFrame(staging, dimLocation), "location_key", factOrder,
       lagCol = "avg_temp_f", sumCol = "precipitation_in", n = 7,
       deltaName = "temp_day_delta", sumName = "precipitation_7d_sum")
+
+  def fact(spark: SparkSession, dir: String): DataFrame =
+    fact(staging(spark, dir), dimLocation(spark, dir))
 
   /** The declarative Window twin of [[fact]] — WindowExec's sliding
     * frame re-aggregates all 7 frame rows per output row and measured

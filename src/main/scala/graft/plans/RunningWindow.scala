@@ -56,11 +56,6 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
   */
 object RunningWindow {
 
-  /** Append `round(lagCol − lag(lagCol), 4)` and
-    * `round(sum(sumCol) over last n rows, 4)` per `partCol` group in
-    * `order`. `partCol` must be LONG, `lagCol`/`sumCol` DOUBLE (the
-    * fact-build shapes; widen when a second caller needs it).
-    */
   /** The declarative exchange stage the streaming pass consumes: ONE
     * hash exchange on the window key + partition-local sort. Public so
     * plan audits can assert the production subtree's shape (all-
@@ -71,6 +66,11 @@ object RunningWindow {
     df.repartition(col(partCol))
       .sortWithinPartitions(col(partCol) +: order: _*)
 
+  /** Append `round(lagCol − lag(lagCol), 4)` and
+    * `round(sum(sumCol) over last n rows, 4)` per `partCol` group in
+    * `order`. `partCol` must be LONG, `lagCol`/`sumCol` DOUBLE (the
+    * fact-build shapes; widen when a second caller needs it).
+    */
   def lagDeltaAndRollingSum(df: DataFrame, partCol: String,
                             order: Seq[Column], lagCol: String,
                             sumCol: String, n: Int,

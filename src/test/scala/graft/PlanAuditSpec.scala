@@ -31,7 +31,10 @@ class PlanAuditSpec extends SparkSpec {
   // whose RDD boundary hides the upstream subtree from fact()'s own
   // explain — so the star-join and exchange audits pin the EXACT
   // subtree the pass consumes (RunningWindow.sortedInput over
-  // factFrame, the same call fact() makes internally).
+  // factFrame, the same call fact() makes internally). That subtree's
+  // joins: staging ⋈ broadcast(current dim_location) on the postal
+  // code, × broadcast(dim_source); the date dimension is a not-null
+  // filter on the staging date, not a join.
   test("fact star join is all-broadcast: no sort-merge join, no fact-side shuffle for joins") {
     val plan = finalPlan(graft.plans.RunningWindow.sortedInput(
       WeatherMart.factFrame(spark, sf()), "location_key", WeatherMart.factOrder))
@@ -44,6 +47,14 @@ class PlanAuditSpec extends SparkSpec {
       WeatherMart.factFrame(spark, sf()), "location_key", WeatherMart.factOrder))
     val n = "hashpartitioning\\(location_key".r.findAllMatchIn(plan).length
     assert(n == 1, s"expected exactly 1 window exchange, saw $n:\n$plan")
+  }
+
+  test("fact frame scans lineitem once: no date-dimension subtree") {
+    val plan = finalPlan(WeatherMart.factFrame(spark, sf()))
+    val scans = "FileScan parquet [^\n]*lineitem".r.findAllMatchIn(plan).length
+    assert(scans == 1, s"expected exactly 1 lineitem scan, saw $scans:\n$plan")
+    assert("Aggregate\\(keys=\\[[^\\]]*date_(key|valid)".r.findFirstIn(plan).isEmpty,
+      s"fact frame aggregates over the date (a dim_date distinct):\n$plan")
   }
 
   test("staging scan prunes to the projected columns only") {

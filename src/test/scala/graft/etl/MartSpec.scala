@@ -1,6 +1,7 @@
 package graft.etl
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -14,11 +15,36 @@ class MartSpec extends SparkSpec {
     (Mart.DimTables :+ Mart.FactTable).foreach { t =>
       assert(Mart.table(spark, out, t).count() > 0, s"table $t is empty")
     }
+    // every written table equals its standalone builder as a row
+    // multiset — the shared pinned dim_location changes no output
+    def sameRows(got: DataFrame, want: DataFrame, what: String): Unit = {
+      val g = got.select(want.columns.map(col).toIndexedSeq: _*)
+      assert(g.count() == want.count() &&
+        g.exceptAll(want).isEmpty && want.exceptAll(g).isEmpty,
+        s"$what diverged from its standalone builder")
+    }
+    Seq(
+      "dim_date" -> WeatherMart.dimDate(spark, sf()),
+      "dim_location" -> WeatherMart.dimLocation(spark, sf()),
+      "dim_band" -> WeatherMart.dimBand(spark, sf()),
+      "dim_precip_type" -> WeatherMart.dimPrecipType(spark, sf()),
+      "dim_source" -> WeatherMart.dimSource(spark),
+      "normalized_location" -> WeatherMart.normalizedLocation(spark, sf())
+    ).foreach { case (t, want) => sameRows(Mart.table(spark, out, t), want, t) }
     // fact content round-trips (modulo the derived partition column)
     val direct = WeatherMart.fact(spark, sf())
     val mart = Mart.table(spark, out, Mart.FactTable)
-    assert(mart.count() == direct.count())
     assert(mart.columns.toSet == direct.columns.toSet + "year")
+    sameRows(mart, direct, Mart.FactTable)
+
+    // referential integrity across the WRITTEN tables (reference §3.6):
+    // every fact foreign key resolves in its written dimension
+    Seq("location_key" -> "dim_location", "date_key" -> "dim_date")
+      .foreach { case (k, dim) =>
+        val orphans = mart.join(Mart.table(spark, out, dim), Seq(k), "left_anti")
+        assert(mart.filter(col(k).isNull).isEmpty && orphans.isEmpty,
+          s"fact $k does not resolve in $dim")
+      }
 
     // a date-ranged read prunes year partitions before opening files
     val pruned = Mart.factBetween(spark, out, "1995-01-01", "1995-12-31")
