@@ -119,7 +119,7 @@ object Bench {
     * plus the materialized-mart dashboard twins.
     */
   private[graft] def legendNames: Seq[String] =
-    SparkEntry.benchQueries.keys.toSeq ++ (1 to 5).map(i => s"q${i}m")
+    SparkEntry.benchQueries.keys.toSeq ++ graft.etl.Dashboard.martQueries.keys
 
   /** The coverage tier ladder for the JSON line (see the comment at
     * the call site). Tiers 3-4 stand BOTH dashboard families in under
@@ -268,25 +268,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // shuffle-file removal (triggered by the between-query GC sweep
-      // below) runs to completion inside the cleaner thread instead of
-      // firing off more async deletes that would race the next timed
-      // query's IO
-      .config("spark.cleaner.referenceTracking.blocking.shuffle", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession()
     // scale shuffle width with the data, not the host (VERDICT r12 #3:
     // a constant 32 at sf10's 60M-row lineitem packed ~2M rows per
     // shuffle partition and nondeterministically killed the JVM)
-    val shufP = graft.core.Tuning.autoShufflePartitions(spark, sfDir)
-    System.err.println(s"[bench] shuffle partitions: $shufP")
+    graft.core.Tuning.autoShufflePartitions(spark, sfDir)
 
     def force(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.mode("overwrite").format("noop").save()
@@ -322,7 +308,7 @@ object Bench {
     // on-heap, and late queries measure page-cache eviction + GC
     // pressure instead of their plan. The sweep forces the GC between
     // queries (outside every timed region), gives the cleaner thread a
-    // beat to drain (shuffle removal is blocking, see conf above), and
+    // beat to drain (shuffle removal is blocking, see GraftSession), and
     // logs what remains — local-dir bytes, post-GC heap, cumulative
     // codegen compilations — so any residual run-state growth is
     // visible in the round log instead of needing artifact archaeology.
@@ -364,7 +350,7 @@ object Bench {
     // is untimed setup.
     val martDir = sys.env.getOrElse("SPARK_GRAFT_MART_DIR",
       System.getProperty("java.io.tmpdir") + "/graft_bench_mart")
-    val martNames = (1 to 5).map(i => s"q${i}m")
+    val martNames = graft.etl.Dashboard.martQueries.keys.toSeq.sorted
     val martWanted = onlyEnv.forall(names => martNames.exists(names.contains))
     // names that never produced a runnable query (e.g. the mart
     // materialize crashed) — surfaced in the "failed" list, never
@@ -374,19 +360,8 @@ object Bench {
       if (!martWanted) Seq.empty
       else try {
         graft.etl.Mart.materialize(spark, sfDir, martDir)
-        import graft.etl.{Dashboard, Mart}
-        def mt(n: String) = Mart.table(spark, martDir, n)
-        Seq(
-          "q1m" -> ((_: SparkSession, _: String) =>
-            Dashboard.avgByDate(mt(Mart.FactTable), mt("dim_date"))),
-          "q2m" -> ((_: SparkSession, _: String) =>
-            Dashboard.topNByLocation(mt(Mart.FactTable), mt("dim_location"), 15)),
-          "q3m" -> ((_: SparkSession, _: String) =>
-            Dashboard.avgByClass(mt(Mart.FactTable))),
-          "q4m" -> ((_: SparkSession, _: String) =>
-            Dashboard.bandCounts(mt(Mart.FactTable))),
-          "q5m" -> ((_: SparkSession, _: String) =>
-            Dashboard.pctPositiveByDate(mt(Mart.FactTable))))
+        graft.etl.Dashboard.martQueries.toSeq.map { case (n, q) =>
+          n -> ((s: SparkSession, _: String) => q(s, martDir)) }
       } catch { case e: Throwable =>
         System.err.println(s"[bench] mart materialize failed: ${e.getMessage}")
         preFailed = martNames.filter(n => onlyEnv.forall(_.contains(n)))
@@ -417,41 +392,20 @@ object Bench {
     // past 3x median was hit by a noise burst and is discarded.
     val sentinelName = "dim_source"
 
-    // per-query shuffle read+write bytes: a cumulative task-metrics
-    // listener snapshotted around each timed run (events flushed via
-    // BenchBus before each snapshot so a query's last tasks can't be
-    // credited to the next query)
-    val shuffleAcc = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null)
-            shuffleAcc.addAndGet(m.shuffleReadMetrics.totalBytesRead +
-              m.shuffleWriteMetrics.bytesWritten)
-        }
-      })
-    def shuffleSnapshot(): Long = {
-      try org.apache.spark.graft.BenchBus.waitUntilEmpty(spark.sparkContext)
-      catch { case _: Throwable => () }
-      shuffleAcc.get()
-    }
+    // per-query shuffle read+write bytes, counted around each timed run
+    val bytes = new graft.core.GraftSession.TaskBytes(spark)
 
     final case class Sample(round: Int, name: String, sec: Double, ok: Boolean,
                             shufBytes: Long = 0L)
     val samples = (1 to iters).flatMap { round =>
       val qSamples = qs0.map { case (name, fn) =>
-        val s0 = shuffleSnapshot()
-        val t0 = System.nanoTime()
-        val ok =
+        val (ok, _, sb, t) = bytes.measured {
           try { force(fn(spark, sfDir)); true }
           catch { case e: Throwable =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
             false
           }
-        val t = (System.nanoTime() - t0) / 1e9
-        val sb = shuffleSnapshot() - s0
+        }
         sweepRunState(s"after r$round $name")
         System.err.println(f"[bench] round $round $name: $t%.2f${if (ok) "" else " FAILED"}")
         Sample(round, name, t, ok, sb)

@@ -1568,10 +1568,12 @@ object SparkEntry {
     s"${embeddingNearDupBody(0.35, bands, rows)}\nORDER BY vec_a, vec_b"
 
   /** The four embedding-LSH oracle SQLs at an ARBITRARY geometry —
-    * (8, 6) reproduces the standing oracle entries; the sf10 sweep
-    * dumps them at its dense-regime width (EmbeddingScale) so
-    * tools/selfcheck.py gates those outputs against DuckDB directly,
-    * retiring the numpy substitute replay (VERDICT r11 #1).
+    * (8, 6) reproduces the standing oracle entries; [[oracleSqlFor]]
+    * resolves them at the width the AutoWidth query entries pick for
+    * the corpus (r = 16 at sf10), so `graft.Verify` dumps the matching
+    * oracle SQL at every SF and tools/selfcheck.py gates those outputs
+    * against DuckDB directly, retiring the numpy substitute replay
+    * (VERDICT r11 #1).
     */
   private[graft] def embeddingOracleSqlAt(bands: Int,
                                           rows: Int): Map[String, String] =

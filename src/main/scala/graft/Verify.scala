@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,18 +8,9 @@ object Verify {
     // optional 3rd arg: comma-separated query-name filter (local iteration)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession()
     // scale shuffle width with the data, not the host (VERDICT r12 #3)
-    System.err.println("[verify] shuffle partitions: " +
-      graft.core.Tuning.autoShufflePartitions(spark, sfDir))
+    graft.core.Tuning.autoShufflePartitions(spark, sfDir)
     new java.io.File(outDir).mkdirs()
     // Single-file output (coalesce(1)) is the driver default — one
     // part per query keeps the sf0.01 compare trivial. At synthetic

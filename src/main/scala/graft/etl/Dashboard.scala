@@ -102,4 +102,22 @@ object Dashboard {
 
   def pctPositiveByDate(spark: SparkSession, dir: String): DataFrame =
     pctPositiveByDate(WeatherMart.factFrame(spark, dir))
+
+  /** The five dashboards over a mart written by [[Mart.materialize]],
+    * keyed q1m..q5m: each takes the session and the MART directory
+    * (not an SF directory). These are the read-path twins of the
+    * inline q1..q5 above, timed by Bench and dumped by PlanLab.
+    */
+  val martQueries: Map[String, (SparkSession, String) => DataFrame] = {
+    def fact(spark: SparkSession, mart: String) =
+      Mart.table(spark, mart, Mart.FactTable)
+    Map(
+      "q1m" -> ((spark, mart) =>
+        avgByDate(fact(spark, mart), Mart.table(spark, mart, "dim_date"))),
+      "q2m" -> ((spark, mart) => topNByLocation(fact(spark, mart),
+        Mart.table(spark, mart, "dim_location"), 15)),
+      "q3m" -> ((spark, mart) => avgByClass(fact(spark, mart))),
+      "q4m" -> ((spark, mart) => bandCounts(fact(spark, mart))),
+      "q5m" -> ((spark, mart) => pctPositiveByDate(fact(spark, mart))))
+  }
 }

@@ -23,7 +23,7 @@ object Mart {
 
   /** Write the six dimension tables and the year-partitioned fact.
     *
-    * The location dimension is built once and pinned (localCheckpoint,
+    * The location dimension is built once and pinned ([[graft.core.Pin]],
     * the [[StarSchema.scd2Merge]] idiom): `dim_location`,
     * `normalized_location` and the fact's surrogate-key join all read
     * that one frame. Each write is a separate query, so Catalyst cannot
@@ -35,7 +35,7 @@ object Mart {
   def materialize(spark: SparkSession, srcDir: String, outDir: String): Unit = {
     def write(df: DataFrame, name: String): Unit =
       df.write.mode("overwrite").parquet(s"$outDir/$name")
-    val dimLocation = WeatherMart.dimLocation(spark, srcDir).localCheckpoint()
+    val dimLocation = graft.core.Pin.pin(WeatherMart.dimLocation(spark, srcDir))
     write(WeatherMart.dimDate(spark, srcDir), "dim_date")
     write(dimLocation, "dim_location")
     write(WeatherMart.dimBand(spark, srcDir), "dim_band")
@@ -110,7 +110,7 @@ object Mart {
     * are byte-identical after the merge (spec-pinned, the
     * expirePartitions precedent).
     *
-    * The merged frame is materialized (localCheckpoint) before the
+    * The merged frame is pinned ([[graft.core.Pin]]) before the
     * write because it reads the directories the write replaces.
     * Re-running the same merge converges: replayed feed keys
     * anti-join their own previous application away.
@@ -119,7 +119,7 @@ object Mart {
                 keys: Seq[String] = Seq("date_key", "l_orderkey",
                   "l_linenumber")): Unit = {
     val up = updates.withColumn("year", year(col("date_key")))
-      .localCheckpoint()
+      .transform(graft.core.Pin.pin(_))
     val touchedRows = up.select("year").distinct().collect()
     // year(NULL) is NULL: without this check a NULL date_key in the
     // feed surfaced as an opaque NPE on getInt below — name the
@@ -135,7 +135,7 @@ object Mart {
     val merged = stored
       .join(up.select(keys.map(col): _*), keys, "left_anti")
       .unionByName(up.select(stored.columns.map(col): _*))
-      .localCheckpoint()
+      .transform(graft.core.Pin.pin(_))
     merged.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("year")

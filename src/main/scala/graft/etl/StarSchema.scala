@@ -79,8 +79,8 @@ object StarSchema {
     * locally-windowed frame feeds BOTH the totals and the final join;
     * without pinning, each consumer replays the whole upstream lineage
     * (source scan + distinct + the min/max stats subtree), so it is
-    * localCheckpoint'd once — one pass of the input plus two small
-    * columns, and the offsets pass cannot start before it anyway.
+    * pinned ([[graft.core.Pin]]) once — one pass of the input plus two
+    * small columns, and the offsets pass cannot start before it anyway.
     */
   private def bucketedTwoPhase(src: DataFrame, orderBy: Seq[String],
                                buckets: Int, outName: String)(
@@ -91,7 +91,7 @@ object StarSchema {
     val bucket = orderBucket(src, orderBy.head, buckets)
     val w = Window.partitionBy("__bkt").orderBy(orderBy.map(col): _*)
     val local = bucket(src).withColumn("__loc", localOver(w))
-      .localCheckpoint(eager = false)
+      .transform(graft.core.Pin.pin(_, eager = false))
     val totals = local.groupBy("__bkt").agg(bucketTotal.as("__tot"))
     val offsets = totals.as("a")
       .join(totals.as("b"), col("b.__bkt") < col("a.__bkt"), "left")
@@ -239,7 +239,7 @@ object StarSchema {
     // derives it inline (rather than reading a stored table) each of
     // those replays the whole dim-build lineage; pin it once — it is
     // dimension-sized by definition.
-    val dimM = dim.localCheckpoint(eager = false)
+    val dimM = graft.core.Pin.pin(dim, eager = false)
     val current = dimM.filter(col("is_current"))
     val snap = snapshot.select((businessKey ++ attrs).map(col): _*).distinct()
 
@@ -265,7 +265,7 @@ object StarSchema {
       businessKey.map(k => col(s"cur.$k") <=> col(s"snap.$k")).reduce(_ && _) &&
         col("cur.is_current"),
       "full_outer")
-      .localCheckpoint(eager = false)
+      .transform(graft.core.Pin.pin(_, eager = false))
 
     // history rows, current rows absent from the snapshot, and current
     // rows with identical attrs: keep verbatim

@@ -90,7 +90,7 @@ object QualityModel {
     * `trace` is set, the per-iteration log-loss (an extra pass each
     * iteration — spec/diagnostic use; production leaves it off).
     *
-    * Each iteration localCheckpoints the ≤2^bits-row model frame:
+    * Each iteration pins ([[graft.core.Pin]]) the ≤2^bits-row model frame:
     * without it, iteration k's plan re-derives every previous
     * iteration (the connected-components lineage lesson).
     */
@@ -103,7 +103,7 @@ object QualityModel {
     require(n > 0, "train needs at least one labeled doc")
 
     var model = inst.select("feat").distinct()
-      .withColumn("weight", lit(0.0)).localCheckpoint(eager = true)
+      .withColumn("weight", lit(0.0)).transform(graft.core.Pin.pin(_))
     val losses = Seq.newBuilder[Double]
     for (_ <- 1 to iters) {
       if (trace) losses += logLoss(inst, labels, model)
@@ -112,12 +112,12 @@ object QualityModel {
       val grads = inst.join(resid, "doc_id")
         .groupBy("feat").agg((sum("resid") / n).as("grad"))
       // every instance feature is a model key (init covers them all),
-      // so a left join is total; localCheckpoint truncates lineage
+      // so a left join is total; the pin truncates lineage
       model = model.join(grads, Seq("feat"), "left")
         .select(col("feat"),
           (col("weight") - lit(lr) * coalesce(col("grad"), lit(0.0)))
             .as("weight"))
-        .localCheckpoint(eager = true)
+        .transform(graft.core.Pin.pin(_))
     }
     if (trace) losses += logLoss(inst, labels, model)
     inst.unpersist()

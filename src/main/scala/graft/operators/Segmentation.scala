@@ -222,7 +222,7 @@ object Segmentation {
     // corpus scan + distinct run once, not once per side
     val names = df.select(col(nameCol).as("name"))
       .filter(col("name").isNotNull).distinct()
-      .localCheckpoint(eager = false)
+      .transform(graft.core.Pin.pin(_, eager = false))
     // case handled by the character class, NOT lower(): Unicode
     // lowercasing can map one char to two (İ → i̇), which would break
     // the per-edit ≤1 count-change bound the blocking's losslessness

@@ -70,7 +70,7 @@ object Similarity {
         .groupBy("cell_id")
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
           _.getField("m").cast("float")).as("centroid"))
-        .localCheckpoint()
+        .transform(graft.core.Pin.pin(_))
     }
     cur
   }
@@ -252,8 +252,9 @@ object Similarity {
         stored.select("vec_id", "embedding").dropDuplicates("vec_id"),
         newCentroids, "vec_id", "embedding", n = 1)
       .withColumnRenamed("cell_id", "__new_cell")
-      .localCheckpoint() // read twice (affected set + content) and the
-                         // write below overwrites the dirs it reads
+      // read twice (affected set + content) and the write below
+      // overwrites the dirs it reads
+      .transform(graft.core.Pin.pin(_))
     // the affected set derives from ALL stored rows, not a per-vec
     // survivor: ANY stored copy sitting in a cell other than its
     // winner cell marks both that cell and the winner cell — so a
@@ -955,7 +956,7 @@ object Similarity {
         .join(updated.as("u"), Seq("sub_id", "code"), "left")
         .select(col("sub_id"), col("code"),
           coalesce(col("u.centroid"), col("o.centroid")).as("centroid"))
-        .localCheckpoint()
+        .transform(graft.core.Pin.pin(_))
     }
     codebook
   }

@@ -90,7 +90,7 @@ class CurationPipeline(val spark: SparkSession, dir: String,
         Corpus.decontaminateSemanticKeep(gated0, b, minBenchCosine)
       case _ => gated0
     }
-    val gated = if (checkpointGate) deconed.localCheckpoint() else deconed
+    val gated = if (checkpointGate) graft.core.Pin.pin(deconed) else deconed
     val unique = exact.accept(gated, batchId)
     val novel = near.accept(unique, batchId)
     val out = spans.scrub(novel, batchId)
@@ -111,7 +111,7 @@ class CurationPipeline(val spark: SparkSession, dir: String,
   /** [[accept]] plus the per-stage funnel — the observability a
     * production intake needs per batch (where did the batch shrink:
     * gate, exact, near, span?). Each count runs on a frame the stage
-    * chain materialized (localCheckpoint), so the funnel costs cached
+    * chain materialized (pinned), so the funnel costs cached
     * counts plus one input count, never a recompute of a stage.
     */
   def acceptWithStats(batch: DataFrame, batchId: Long): (DataFrame, CurationStats) = {

@@ -55,9 +55,9 @@ private[streaming] object EmbeddingIndexOps {
     val realIds = batch.filter(col("vec_id").isNotNull)
     val kept = realIds.join(probe(realIds), Seq("vec_id"), "left_semi")
       .unionByName(batch.filter(col("vec_id").isNull))
-      // localCheckpoint BEFORE the write: the kept plan reads the very
+      // pin BEFORE the write: the kept plan reads the very
       // parquet dirs being written
-      .localCheckpoint()
+      .transform(graft.core.Pin.pin(_))
     writeIndexRows(kept.filter(col("vec_id").isNotNull)
       .select(col("vec_id"), col("embedding")), batchId)
     kept

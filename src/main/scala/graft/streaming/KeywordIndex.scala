@@ -104,7 +104,7 @@ class KeywordIndex(protected val spark: SparkSession, dir: String)
     val real = batch
       .filter(col("doc_id").isNotNull && col("text").isNotNull)
       .dropDuplicates("doc_id")
-      .localCheckpoint()
+      .transform(graft.core.Pin.pin(_))
     Retrieval.postingsTable(real)
       .withColumn("src_batch", lit(batchId))
       .write.mode("overwrite").parquet(s"$postingsDir/batch=$batchId")

@@ -479,7 +479,7 @@ class NearDupIndex(protected val spark: SparkSession, dir: String, n: Int = 3,
     * cross-batch near-dups drop — while a REPLAY of this batch id
     * neither matches its own prior rows nor duplicates them.
     *
-    * The accepted frame is localCheckpoint'd (materialized) BEFORE the
+    * The accepted frame is pinned (materialized) BEFORE the
     * write: its plan reads the very parquet dirs being written, and a
     * lazy plan re-evaluated afterwards would see the batch's own
     * postings and drop everything as a self-match.
@@ -495,7 +495,7 @@ class NearDupIndex(protected val spark: SparkSession, dir: String, n: Int = 3,
       StreamDedup.exceptBatch(shingles, batchId),
       n, numHashes, bands, minJaccard)
       .unionByName(batch.filter(col("doc_id").isNull))
-      .localCheckpoint()
+      .transform(graft.core.Pin.pin(_))
     val keptDocs = kept.filter(col("doc_id").isNotNull)
       .select(col("doc_id"), col("text"))
     Dedup.bandedBuckets(keptDocs, n, numHashes, bands).write.mode("overwrite")
@@ -587,7 +587,7 @@ class SpanIndex(protected val spark: SparkSession, dir: String, k: Int = 8)
     * seen (or shared within the batch) excised — all non-text batch
     * columns preserved, `clean_text` and `n_removed` attached — and
     * grows the index with the batch's grams (own-partition overwrite;
-    * see the class doc's replay contract). localCheckpoint'd before
+    * see the class doc's replay contract). Pinned before
     * the write for the same read-write reason as
     * [[NearDupIndex.accept]].
     */
@@ -606,7 +606,7 @@ class SpanIndex(protected val spark: SparkSession, dir: String, k: Int = 8)
     val cleaned = realIds.drop("text")
       .join(Dedup.exciseWith(realIds, spans(batch, batchId)), Seq("doc_id"))
       .unionByName(nullIdRows)
-      .localCheckpoint()
+      .transform(graft.core.Pin.pin(_))
     Dedup.gramTable(batch, k).write.mode("overwrite")
       .parquet(s"$gramsDir/batch=$batchId")
     cleaned
@@ -664,7 +664,7 @@ class ExactIndex(protected val spark: SparkSession, dir: String)
         StreamDedup.exceptBatch(hashes, batchId)).select("doc_id"),
         Seq("doc_id"), "left_semi")
       .unionByName(batch.filter(col("doc_id").isNull || col("text").isNull))
-      .localCheckpoint()
+      .transform(graft.core.Pin.pin(_))
     kept.filter(col("doc_id").isNotNull && col("text").isNotNull)
       .select(md5(col("text")).as("content_hash")).distinct()
       .write.mode("overwrite").parquet(s"$hashesDir/batch=$batchId")

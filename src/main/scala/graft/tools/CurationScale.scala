@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.streaming.CurationPipeline
@@ -35,42 +35,8 @@ object CurationScale {
   def main(args: Array[String]): Unit = {
     val (sfSmall, sfBig, batchSrc) = (args(0), args(1), args(2))
     val outPath = if (args.length > 3) args(3) else "target/curation_scale.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val readAcc = new java.util.concurrent.atomic.AtomicLong
-    val shufAcc = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) {
-            readAcc.addAndGet(m.inputMetrics.bytesRead)
-            shufAcc.addAndGet(m.shuffleReadMetrics.totalBytesRead +
-              m.shuffleWriteMetrics.bytesWritten)
-          }
-        }
-      })
-    def snap(): (Long, Long) = {
-      try org.apache.spark.graft.BenchBus.waitUntilEmpty(spark.sparkContext)
-      catch { case _: Throwable => () }
-      (readAcc.get(), shufAcc.get())
-    }
-    def measured[T](f: => T): (T, Long, Long, Double) = {
-      val (r0, s0) = snap(); val t0 = System.nanoTime()
-      val r = f
-      val dt = (System.nanoTime() - t0) / 1e9
-      val (r1, s1) = snap()
-      (r, r1 - r0, s1 - s0, dt)
-    }
+    val spark = graft.core.GraftSession()
+    val bytes = new graft.core.GraftSession.TaskBytes(spark)
 
     val src = spark.read.parquet(s"$batchSrc/documents.parquet")
     val nBatches = 10
@@ -118,7 +84,7 @@ object CurationScale {
       // Seed all three indexes through the pipeline's own backfill path
       // (batch id 0) — the 10× seed is what the probes must stay flat
       // against. Seeding cost is recorded but not part of the curve.
-      val (_, _, _, seedSecs) = measured {
+      val (_, _, _, seedSecs) = bytes.measured {
         pipe.sinkTo(sinkDir, Some(statsDir))(seedDocs, 0L)
       }
       val nSeed = seedDocs.count()
@@ -126,7 +92,7 @@ object CurationScale {
         "secs" -> seedSecs)
       for (b <- 0 until nBatches) {
         val nIn = batches(b).count()
-        val (_, rd, sh, secs) = measured {
+        val (_, rd, sh, secs) = bytes.measured {
           pipe.sinkTo(sinkDir, Some(statsDir))(batches(b), (b + 1).toLong)
         }
         // funnel read-back (outside the measurement): the artifact must

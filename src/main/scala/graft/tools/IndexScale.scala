@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.streaming.{ExactIndex, KeywordIndex, NearDupIndex}
@@ -29,42 +29,8 @@ object IndexScale {
   def main(args: Array[String]): Unit = {
     val (sfSmall, sfBig, batchSrc) = (args(0), args(1), args(2))
     val outPath = if (args.length > 3) args(3) else "target/index_scale.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val readAcc = new java.util.concurrent.atomic.AtomicLong
-    val shufAcc = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) {
-            readAcc.addAndGet(m.inputMetrics.bytesRead)
-            shufAcc.addAndGet(m.shuffleReadMetrics.totalBytesRead +
-              m.shuffleWriteMetrics.bytesWritten)
-          }
-        }
-      })
-    def snap(): (Long, Long) = {
-      try org.apache.spark.graft.BenchBus.waitUntilEmpty(spark.sparkContext)
-      catch { case _: Throwable => () }
-      (readAcc.get(), shufAcc.get())
-    }
-    def measured[T](f: => T): (T, Long, Long, Double) = {
-      val (r0, s0) = snap(); val t0 = System.nanoTime()
-      val r = f
-      val dt = (System.nanoTime() - t0) / 1e9
-      val (r1, s1) = snap()
-      (r, r1 - r0, s1 - s0, dt)
-    }
+    val spark = graft.core.GraftSession()
+    val bytes = new graft.core.GraftSession.TaskBytes(spark)
 
     // per-batch NEW content: ids offset per batch, a batch token
     // interleaved between every word (no shared 3-shingles with
@@ -123,7 +89,7 @@ object IndexScale {
         val idx = new ExactIndex(spark, dir)
         idx.append(seedDocs)
         for (b <- 0 until nBatches) {
-          val (kept, rd, sh, secs) = measured {
+          val (kept, rd, sh, secs) = bytes.measured {
             idx.accept(batches(b), b + 1).count()
           }
           rec("index" -> "exact", "seed" -> seedName, "batch" -> b,
@@ -141,7 +107,7 @@ object IndexScale {
         val idx = new NearDupIndex(spark, dir)
         idx.append(seedDocs)
         for (b <- 0 until nBatches) {
-          val (kept, rd, sh, secs) = measured {
+          val (kept, rd, sh, secs) = bytes.measured {
             idx.accept(batches(b), b + 1).count()
           }
           rec("index" -> "neardup", "seed" -> seedName, "batch" -> b,
@@ -159,7 +125,7 @@ object IndexScale {
         val idx = new KeywordIndex(spark, dir)
         idx.accept(seedDocs, 0L)
         for (b <- 0 until nBatches) {
-          val (_, rd, sh, secs) = measured {
+          val (_, rd, sh, secs) = bytes.measured {
             idx.accept(batches(b), b + 1); () // writes happen inside accept
           }
           rec("index" -> "keyword", "seed" -> seedName, "batch" -> b,
@@ -168,7 +134,7 @@ object IndexScale {
         }
         val queries = Seq(1 -> Seq("the", "of"), 2 -> Seq("data", "with"),
           3 -> Seq("zb3"))
-        val (hits, rd, sh, secs) = measured {
+        val (hits, rd, sh, secs) = bytes.measured {
           idx.search(queries, k = 10).count()
         }
         rec("index" -> "keyword", "seed" -> seedName, "batch" -> "search",

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Banding, Dedup, Similarity, TextOps}
@@ -27,41 +27,8 @@ object LshScale {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outPath = if (args.length > 1) args(1) else "target/lsh_scale.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // cumulative shuffle read+write bytes, snapshotted around each run
-    // (the Bench listener pattern; events flushed before each snapshot)
-    val shuffleAcc = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null)
-            shuffleAcc.addAndGet(m.shuffleReadMetrics.totalBytesRead +
-              m.shuffleWriteMetrics.bytesWritten)
-        }
-      })
-    def snap(): Long = {
-      try org.apache.spark.graft.BenchBus.waitUntilEmpty(spark.sparkContext)
-      catch { case _: Throwable => () }
-      shuffleAcc.get()
-    }
-    /** Run `f`, returning (result, shuffleBytes, seconds). */
-    def measured[T](f: => T): (T, Long, Double) = {
-      val s0 = snap(); val t0 = System.nanoTime()
-      val r = f
-      val dt = (System.nanoTime() - t0) / 1e9
-      (r, snap() - s0, dt)
-    }
+    val spark = graft.core.GraftSession()
+    val bytes = new graft.core.GraftSession.TaskBytes(spark)
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
@@ -124,7 +91,7 @@ object LshScale {
       val candidates = Banding.pairs(banded, Banding.BandBucket,
         "doc_id", "doc_a", "doc_b").count()
       // full query end-to-end, shuffle-measured
-      val ((nFound, nPlantedFound), shufFull, secs) = measured {
+      val ((nFound, nPlantedFound), _, shufFull, secs) = bytes.measured {
         val f = Dedup.minhashLsh(docs, 3, nh, bands, minJ)
           .select(col("doc_a"), col("doc_b"),
             (pmod(col("doc_a"), lit(K)) === pmod(col("doc_b"), lit(K)))
@@ -160,7 +127,7 @@ object LshScale {
         .agg(sum(expr("count*(count-1)/2")).cast("long")).head().getLong(0)
       val candidates = Banding.pairs(banded, Banding.BandBucket,
         "vec_id", "vec_a", "vec_b").count()
-      val ((nFound, nPlantedFound), shufFull, secs) = measured {
+      val ((nFound, nPlantedFound), _, shufFull, secs) = bytes.measured {
         val f = (if (useDefault) Similarity.nearDupPairs(emb, minCos, bands)
                  else Similarity.nearDupPairs(emb, minCos, bands, r))
           .select(col("vec_a"), col("vec_b"),
@@ -186,7 +153,7 @@ object LshScale {
     // true pairs — the lower bound any candidate generator competes
     // against (plus the postings exchange every LSH pays)
     def docFloor(): Unit = {
-      val ((n, _), shuf, secs) = measured {
+      val ((n, _), _, shuf, secs) = bytes.measured {
         val sh = docs.select(col("doc_id"),
           TextOps.shingleHashes(col("text"), 3).as("sh"))
         val f = plantedDocs
@@ -202,7 +169,7 @@ object LshScale {
       System.err.println(s"[lsh] doc verify floor: $n pairs shuf=$shuf (${secs}s)")
     }
     def vecFloor(): Unit = {
-      val ((n, _), shuf, secs) = measured {
+      val ((n, _), _, shuf, secs) = bytes.measured {
         val e = emb.select(col("vec_id"), col("embedding"))
         val f = plantedVecs
           .join(e.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a")), "vec_a")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
@@ -21,15 +20,7 @@ object OpProf {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession()
     graft.core.Tuning.autoShufflePartitions(spark, sfDir)
 
     // the metric names worth printing; everything else is noise here
@@ -85,8 +76,7 @@ object OpProf {
         val t0 = System.nanoTime()
         df.write.mode("overwrite").format("noop").save()
         val sec = (System.nanoTime() - t0) / 1e9
-        try org.apache.spark.graft.BenchBus.waitUntilEmpty(spark.sparkContext)
-        catch { case _: Throwable => () }
+        graft.core.GraftSession.drainListeners(spark)
         println(f"========== $name ($sec%.2f s) ==========")
         walk(if (lastQe != null) lastQe.executedPlan
              else df.queryExecution.executedPlan, 0)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch harness for plan auditing: prints formatted plans and wall
   * times for named queries so shuffle/reuse regressions are visible.
   * Not part of the driver contract.
@@ -10,40 +8,17 @@ object PlanLab {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSet else Set.empty[String]
-    // one task slot and one shuffle partition per available core, the
-    // sizing the benchmark harness uses
-    val cores = Runtime.getRuntime.availableProcessors
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession()
     // the materialized-mart read twins (q1m..q5m) live outside
     // SparkEntry.queries (Bench builds them around an untimed
     // materialize); mirror that here so their plans are dumpable too,
     // both when named and in dump-all mode (no names given)
-    val martNames = (1 to 5).map(i => s"q${i}m").toSet
-    val martQs: Seq[(String, org.apache.spark.sql.DataFrame)] =
-      if (names.nonEmpty && names.intersect(martNames).isEmpty) Seq.empty
-      else {
-        val martDir =
-          System.getProperty("java.io.tmpdir") + "/graft_planlab_mart"
-        graft.etl.Mart.materialize(spark, sfDir, martDir)
-        import graft.etl.{Dashboard, Mart}
-        def mt(n: String) = Mart.table(spark, martDir, n)
-        Seq(
-          "q1m" -> Dashboard.avgByDate(mt(Mart.FactTable), mt("dim_date")),
-          "q2m" -> Dashboard.topNByLocation(mt(Mart.FactTable),
-            mt("dim_location"), 15),
-          "q3m" -> Dashboard.avgByClass(mt(Mart.FactTable)),
-          "q4m" -> Dashboard.bandCounts(mt(Mart.FactTable)),
-          "q5m" -> Dashboard.pctPositiveByDate(mt(Mart.FactTable)))
-      }
+    val martQs = graft.etl.Dashboard.martQueries
+    val martDir = System.getProperty("java.io.tmpdir") + "/graft_planlab_mart"
+    if (names.isEmpty || names.exists(martQs.contains))
+      graft.etl.Mart.materialize(spark, sfDir, martDir)
     (graft.SparkEntry.queries.toSeq.map { case (n, f) => n -> (() => f(spark, sfDir)) } ++
-      martQs.map { case (n, df) => n -> (() => df) })
+      martQs.toSeq.map { case (n, f) => n -> (() => f(spark, martDir)) })
       .filter { case (n, _) => names.isEmpty || names(n) }
       .sortBy(_._1)
       .foreach { case (name, fn) =>

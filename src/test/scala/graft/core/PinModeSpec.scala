@@ -10,7 +10,8 @@ import graft.SparkSpec
   * clusters) instead of `localCheckpoint` (blocks die with their
   * executor), with IDENTICAL results — exercised on the one genuinely
   * iterative operator (connectedComponents: unbounded lineage without
-  * the pin) and on a guarded probe.
+  * the pin), on a guarded probe, and on the mart build, whose pins
+  * reach [[Pin.pin]] from the ETL library.
   */
 class PinModeSpec extends SparkSpec {
   import spark.implicits._
@@ -89,6 +90,37 @@ class PinModeSpec extends SparkSpec {
       }
       assert(reliable == local,
         "probe survivors diverge between pin modes")
+    } finally {
+      prevDir.foreach(spark.sparkContext.setCheckpointDir)
+    }
+  }
+
+  test("Mart.materialize under reliable mode checkpoints its pins and " +
+       "writes the same tables as the local default") {
+    val prevDir = spark.sparkContext.getCheckpointDir
+    spark.sparkContext.setCheckpointDir(
+      java.nio.file.Files.createTempDirectory("graft_ckpt_mart").toString)
+    try {
+      val tmp = (n: String) =>
+        java.nio.file.Files.createTempDirectory(n).toString
+      val (localOut, reliableOut) = (tmp("graft_mart_l"), tmp("graft_mart_r"))
+      graft.etl.Mart.materialize(spark, sf(), localOut)
+      withMode(Pin.Reliable) {
+        graft.etl.Mart.materialize(spark, sf(), reliableOut)
+      }
+      (graft.etl.Mart.DimTables :+ graft.etl.Mart.FactTable).foreach { t =>
+        val l = graft.etl.Mart.table(spark, localOut, t)
+        val r = graft.etl.Mart.table(spark, reliableOut, t)
+        assert(l.count() > 0 && l.exceptAll(r).isEmpty &&
+          r.exceptAll(l).isEmpty, s"$t differs between pin modes")
+      }
+      // setCheckpointDir made a fresh per-context subdirectory: only a
+      // reliable checkpoint() writes into it
+      val ckpt = new org.apache.hadoop.fs.Path(
+        spark.sparkContext.getCheckpointDir.get)
+      assert(ckpt.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listStatus(ckpt).nonEmpty,
+        s"reliable mode wrote no checkpoint under $ckpt")
     } finally {
       prevDir.foreach(spark.sparkContext.setCheckpointDir)
     }

@@ -148,8 +148,8 @@ class SimilaritySpec extends SparkSpec {
        "clique neighbors, at r = 16") {
     // same planted 10-clique + noise as the nearDupPairs case — the
     // wrappers (semanticDedup / knnGraph) must honor non-default
-    // bands/rowsPerBand all the way down (the sf10 sweep runs them at
-    // this width via tools.EmbeddingScale)
+    // bands/rowsPerBand all the way down (at sf10 the AutoWidth query
+    // entries resolve to this width, and graft.Verify dumps them there)
     val rnd = new scala.util.Random(7)
     val base = Array.fill(64)(rnd.nextFloat() - 0.5f)
     val clique = (0 until 10).map { k =>

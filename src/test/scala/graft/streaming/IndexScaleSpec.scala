@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -16,28 +15,10 @@ import graft.SparkSpec
   * text scan into accept() fails here, not just in the artifact.
   */
 class IndexScaleSpec extends SparkSpec {
-  private val readAcc = new java.util.concurrent.atomic.AtomicLong
+  private lazy val bytes = new graft.core.GraftSession.TaskBytes(spark)
 
-  private lazy val listener = {
-    val l = new SparkListener {
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) readAcc.addAndGet(m.inputMetrics.bytesRead)
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    l
-  }
-
-  /** bytesRead attributable to `f`, with listener-queue drain. */
-  private def bytesReadOf(f: => Unit): Long = {
-    listener // ensure registered
-    def drain(): Unit =
-      org.apache.spark.graft.BenchBus.waitUntilEmpty(spark.sparkContext)
-    drain(); val b0 = readAcc.get()
-    f
-    drain(); readAcc.get() - b0
-  }
+  /** Task input bytes attributable to `f`. */
+  private def bytesReadOf(f: => Unit): Long = bytes.measured(f)._2
 
   private def tmp(name: String): String =
     java.nio.file.Files.createTempDirectory(s"graft_idxscale_$name").toString

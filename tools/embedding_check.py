@@ -9,9 +9,9 @@ exist so the DuckDB oracle can embed the hyperplanes as SQL literals;
 that bucket space is corpus-quadratic by construction (LSH_SCALE.md)
 and at sf10 (200k vectors in 100-member near-dup cliques) it yields
 ~2.5e9 candidate pairs — infeasible for BOTH engines, and not a
-configuration any large corpus would run. The sweep therefore runs the
-operators at the dense-regime width (rowsPerBand=16, the pinned
-cluster-scale rule) via graft.tools.EmbeddingScale, and this tool
+configuration any large corpus would run. The query entries therefore
+resolve the dense-regime width (rowsPerBand=16 at sf10) through
+Similarity.AutoWidth, graft.Verify dumps those outputs, and this tool
 replays the same definition independently:
 
 - same splitmix64 hyperplanes (ported bit-exactly; float32 planes),
