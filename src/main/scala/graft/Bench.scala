@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Benchmark main: runs every SparkEntry query against
+/** Benchmark main: runs every registered query
+  * ([[graft.queries.QueryRegistry]], after its untimed setup) against
   * SPARK_GRAFT_SF_DIR and prints ONE compact JSON line with per-query
   * seconds as the LAST stdout line.
   *
@@ -115,11 +114,11 @@ object Bench {
       names.distinct.sorted.map(n => s"| ${keys(n)} | $n |").mkString("\n") + "\n"
   }
 
-  /** Every name that can appear in the bench line: the query surface
-    * plus the materialized-mart dashboard twins.
+  /** Every name that can appear in the bench line: every registered
+    * query, the materialized-mart dashboard twins included.
     */
   private[graft] def legendNames: Seq[String] =
-    SparkEntry.benchQueries.keys.toSeq ++ graft.etl.Dashboard.martQueries.keys
+    graft.queries.QueryRegistry.all.map(_.name)
 
   /** The coverage tier ladder for the JSON line (see the comment at
     * the call site). Tiers 3-4 stand BOTH dashboard families in under
@@ -343,49 +342,15 @@ object Bench {
     // driver sets no filter and measures everything
     val onlyEnv = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
 
-    // Stretch surface: the five dashboards re-read from the
-    // MATERIALIZED mart — the read path the architecture advertises
-    // (year-partitioned fact, pruned scans) — vs their inline twins
-    // that rebuild the star schema per query. Materialization itself
-    // is untimed setup.
-    val martDir = sys.env.getOrElse("SPARK_GRAFT_MART_DIR",
-      System.getProperty("java.io.tmpdir") + "/graft_bench_mart")
-    val martNames = graft.etl.Dashboard.martQueries.keys.toSeq.sorted
-    val martWanted = onlyEnv.forall(names => martNames.exists(names.contains))
-    // names that never produced a runnable query (e.g. the mart
-    // materialize crashed) — surfaced in the "failed" list, never
-    // silently absent
-    var preFailed: Seq[String] = Seq.empty
-    val martQs: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] =
-      if (!martWanted) Seq.empty
-      else try {
-        graft.etl.Mart.materialize(spark, sfDir, martDir)
-        graft.etl.Dashboard.martQueries.toSeq.map { case (n, q) =>
-          n -> ((s: SparkSession, _: String) => q(s, martDir)) }
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] mart materialize failed: ${e.getMessage}")
-        preFailed = martNames.filter(n => onlyEnv.forall(_.contains(n)))
-        Seq.empty
-      }
-
-    val qs0 = (SparkEntry.benchQueries.toSeq ++ martQs).sortBy(_._1)
-      .filter { case (n, _) => onlyEnv.forall(_.contains(n)) }
-
-    // untimed setup, like the mart: build ann_ivf_probe's memoized IVF
-    // index BEFORE the timed loop so even a single-iteration run times
-    // the steady-state probe, and stamp the build cost on stderr so
-    // the deployment-shape split (build vs probe) is in every run log
-    if (qs0.exists(_._1 == "ann_ivf_probe")) {
-      val t0 = System.nanoTime()
-      try {
-        SparkEntry.prewarmAnnIvfProbe(spark, sfDir)
-        System.err.println(
-          f"[bench] ivf_index_build: ${(System.nanoTime() - t0) / 1e9}%.2f sec (untimed setup)")
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] ivf index prewarm failed: ${e.getMessage}")
-      }
-      sweepRunState("after ivf prewarm")
-    }
+    val wanted = graft.queries.QueryRegistry.all.sortBy(_.name)
+      .filter(q => onlyEnv.forall(_.contains(q.name)))
+    // untimed setup BEFORE the timed loop (the mart materialize, the
+    // IVF index build), its cost stamped on stderr; a query whose
+    // setup failed is surfaced in the "failed" list, never silently
+    // absent and never timed with its setup folded into the sample
+    val preFailed = graft.queries.QuerySpec.runSetups(spark, sfDir, wanted)
+    if (wanted.exists(_.setup.isDefined)) sweepRunState("after setup")
+    val qs0 = wanted.filterNot(q => preFailed(q.name)).map(q => q.name -> q.build)
 
     // Cheap fixed-plan sentinel, timed once per round: its median across
     // rounds calibrates "this host was quiet"; a round where it blows
@@ -413,7 +378,7 @@ object Bench {
       val (sent, sentOk) = {
         val t0 = System.nanoTime()
         val ok =
-          try { force(SparkEntry.benchQueries(sentinelName)(spark, sfDir)); true }
+          try { force(graft.queries.QueryRegistry.named(sentinelName).build(spark, sfDir)); true }
           catch { case e: Throwable =>
             System.err.println(s"[bench] sentinel failed: ${e.getMessage}")
             false
@@ -455,7 +420,8 @@ object Bench {
       val pick = if (quiet.nonEmpty) quiet else ok
       name -> (if (pick.nonEmpty) Some(pick.map(_.sec).min) else None)
     }
-    val failed = preFailed ++ results.collect { case (n, None) => n }
+    val failed = wanted.map(_.name).filter(preFailed) ++
+      results.collect { case (n, None) => n }
     val timed = results.collect { case (n, Some(t)) => n -> t }
     val total = timed.map(_._2).sum
 

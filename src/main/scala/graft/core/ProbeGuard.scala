@@ -69,7 +69,7 @@ object ProbeGuard {
     df.sparkSession.conf
       .get(ConfKey, DefaultMaxBroadcastRows.toString).toLong
 
-  def maxBroadcastBytes(df: DataFrame): Long =
+  private def maxBroadcastBytes(df: DataFrame): Long =
     df.sparkSession.conf
       .get(BytesConfKey, DefaultMaxBroadcastBytes.toString).toLong
 

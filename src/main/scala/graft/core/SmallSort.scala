@@ -23,7 +23,4 @@ import org.apache.spark.sql.{Column, DataFrame}
 object SmallSort {
   def apply(df: DataFrame, cols: Column*): DataFrame =
     df.repartition(1).sortWithinPartitions(cols: _*)
-
-  def byNames(df: DataFrame, cols: String*): DataFrame =
-    apply(df, cols.map(org.apache.spark.sql.functions.col): _*)
 }

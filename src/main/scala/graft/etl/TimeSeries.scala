@@ -35,17 +35,15 @@ object TimeSeries {
     * funnel each location's entire history through one task — wrong
     * trade at 100 TB with bounded location cardinality.)
     */
-  def gapFill(spark: SparkSession, dir: String,
-              ordered: Boolean = true): DataFrame = {
+  def gapFill(spark: SparkSession, dir: String): DataFrame = {
     val daily = WeatherMart.staging(spark, dir)
       .groupBy(col("loc_ref"), col("date_valid"))
       .agg(
         sum(round(col("avg_temp_f") * 100, 0).cast("long")).as("temp_c"),
         count(lit(1)).as("n_obs"))
-    val filled = fillDaily(daily)
-    // the global sort exists only for a deterministic verify dump — a
-    // materialized calendar table would not pay it
-    if (ordered) filled.orderBy("loc_ref", "cal_date") else filled
+    // unsorted: a materialized calendar table does not pay a global
+    // sort; the verify dump sorts (the gap_fill QuerySpec)
+    fillDaily(daily)
   }
 
   /** Densify + forward-fill a (loc_ref, date_valid, temp_c, n_obs)

@@ -122,7 +122,7 @@ object WeatherMart {
     * update legitimately resurrects a deleted key); one brand-new key
     * arrives mid-feed.
     */
-  def locationFeed(spark: SparkSession, dir: String): DataFrame = {
+  private def locationFeed(spark: SparkSession, dir: String): DataFrame = {
     val nat = locationNatural(spark, dir)
     val inserts = nat.withColumn("seq", lit(1L)).withColumn("op", lit("I"))
     val relocated = nat.filter(pmod(col("postal_code"), lit(7)) === 0)

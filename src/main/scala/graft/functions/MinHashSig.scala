@@ -34,6 +34,10 @@ case class MinHashSig(child: Expression, n: Int, k: Int)
     extends UnaryExpression {
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  // null for documents shorter than n tokens, whatever the child's
+  // nullability: doGenCode assigns ev.isNull, which must then be a
+  // variable, not the literal `false` of a non-nullable expression
+  override def nullable: Boolean = true
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess

@@ -90,6 +90,6 @@ object Affinity {
           (col("__na") * col("__nb")), 4).as("lift"))
     // no output sort: the pair frame is catalog²-bounded but still
     // scale-proportional — hash-stability ordering lives in the
-    // verify ledger (SparkEntry.verifySortKeys), per the r12 doctrine
+    // query's verify sort (QuerySpec.sortKeys), per the r12 doctrine
   }
 }

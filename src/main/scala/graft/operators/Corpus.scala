@@ -102,7 +102,7 @@ object Corpus {
                  maxRepetitionRatio: Double = 0.05,
                  maxTopNgramRatio: Double = 0.10): DataFrame =
     // UNSORTED (doctrine: hash-stability sorts live in the verify
-    // wrapper, SparkEntry.verifySortKeys) — identical to
+    // wrapper, QuerySpec.sortKeys) — identical to
     // gopherGateRows, which remains the streaming-named entry point
     gopherGateRows(docs, lang, minTokens, maxTokens, minAvgTokenLen,
       maxAvgTokenLen, maxPunctRatio, minScore, maxRepetitionRatio,
@@ -591,7 +591,7 @@ object Corpus {
       labels = jumped.select("id", "comp")
       i += 1
     }
-    // UNSORTED by doctrine (SparkEntry.queries): hash-stability sorts
+    // UNSORTED by doctrine (QuerySpec.verify): hash-stability sorts
     // live in the verify wrapper only — a production caller of a
     // 100 TB dup graph must not pay a global sort it didn't ask for
     labels.select(col("id").as("doc_id"), col("comp").as("component_id"))

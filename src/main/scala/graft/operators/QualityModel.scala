@@ -50,7 +50,7 @@ object QualityModel {
     * (doc_id, feat). One scan, no shuffle (explode + distinct is
     * per-doc via the array, not a global distinct).
     */
-  def featurize(docs: DataFrame, bits: Int = 16): DataFrame = {
+  private def featurize(docs: DataFrame, bits: Int = 16): DataFrame = {
     require(bits >= 1 && bits <= 24, s"bits must be in [1,24], got $bits")
     // NULL text must not drop the doc: split(NULL) is NULL, concat
     // with a NULL array is NULL, and explode of NULL emits no rows —
@@ -77,7 +77,7 @@ object QualityModel {
   /** Mean log-loss of a model over labeled docs (labels: (doc_id,
     * label) with label ∈ {0,1}).
     */
-  def logLoss(inst: DataFrame, labels: DataFrame, model: DataFrame): Double =
+  private def logLoss(inst: DataFrame, labels: DataFrame, model: DataFrame): Double =
     score(inst, model).join(labels, "doc_id")
       .select(avg(
         -col("label") * log(greatest(col("p"), lit(1e-12)))

@@ -26,7 +26,7 @@ object Segmentation {
   /** Per-customer RFM metrics as exact integers: days since last order
     * at `asOf`, order count, lifetime cents.
     */
-  def rfmMetrics(orders: DataFrame, asOf: String): DataFrame =
+  private def rfmMetrics(orders: DataFrame, asOf: String): DataFrame =
     orders.groupBy(col("o_custkey"))
       .agg(
         datediff(lit(asOf).cast("date"), max(to_date(col("o_orderdate"))))

@@ -387,7 +387,7 @@ object Similarity {
     * call: [[AutoWidth]] → occupancy probe ([[regimeRowsPerBand]]),
     * [[AutoBands]] → recall compensation ([[regimeBands]]) at the
     * call's own threshold. Explicit values pass through untouched.
-    * (The SparkEntry gate entries run bands=8 × AutoWidth since r13 —
+    * (The registered gate queries run bands=8 × AutoWidth since r13 —
     * their DuckDB oracles regenerate the plane literals at the
     * resolved width per SF, so nothing pins the demo width anymore.)
     */

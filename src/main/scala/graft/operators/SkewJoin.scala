@@ -50,17 +50,6 @@ object SkewJoin {
     salted.join(replicated, keys :+ "__salt").drop("__salt")
   }
 
-  /** Convenience for the common fact⋈dim shape where the dim is small
-    * enough to broadcast — in that case broadcasting IS the skew fix
-    * (no shuffle of the big side at all); salting is for when the
-    * small side is too big to broadcast but small enough to replicate.
-    */
-  def joinSkewAware(big: DataFrame, small: DataFrame, keys: Seq[String],
-                    broadcastable: Boolean,
-                    saltBuckets: Int = AutoSalt): DataFrame =
-    if (broadcastable) big.join(broadcast(small), keys)
-    else saltedInner(big, small, keys, saltBuckets)
-
   /** Top-frequency key cut: drop keys whose row count exceeds `maxDf`
     * — the stopword guard used by the inverted-index joins, exposed as
     * a reusable primitive.

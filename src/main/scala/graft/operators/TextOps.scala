@@ -21,10 +21,10 @@ object TextOps {
     * codegen even on rows where the branch never fires, so the hot
     * path ([[segmentIfUnspaced]]) uses the native
     * [[graft.functions.SegmentUnspaced]] kernel instead; this form
-    * exists to spec-check the kernel against (the shinglesHof
-    * precedent).
+    * builds [[segmentIfUnspacedHof]], the reference the kernel is
+    * spec-checked against (the shinglesHof precedent).
     */
-  def charGramJoin(text: Column, n: Int): Column =
+  private def charGramJoin(text: Column, n: Int): Column =
     array_join(
       transform(sequence(lit(1), greatest(length(text) - (n - 1), lit(1))),
         i => text.substr(i, lit(n))), " ")

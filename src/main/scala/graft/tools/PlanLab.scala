@@ -9,20 +9,16 @@ object PlanLab {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSet else Set.empty[String]
     val spark = graft.core.GraftSession()
-    // the materialized-mart read twins (q1m..q5m) live outside
-    // SparkEntry.queries (Bench builds them around an untimed
-    // materialize); mirror that here so their plans are dumpable too,
-    // both when named and in dump-all mode (no names given)
-    val martQs = graft.etl.Dashboard.martQueries
-    val martDir = System.getProperty("java.io.tmpdir") + "/graft_planlab_mart"
-    if (names.isEmpty || names.exists(martQs.contains))
-      graft.etl.Mart.materialize(spark, sfDir, martDir)
-    (graft.SparkEntry.queries.toSeq.map { case (n, f) => n -> (() => f(spark, sfDir)) } ++
-      martQs.toSeq.map { case (n, f) => n -> (() => f(spark, martDir)) })
-      .filter { case (n, _) => names.isEmpty || names(n) }
-      .sortBy(_._1)
-      .foreach { case (name, fn) =>
-        val df = fn()
+    // every registered query (all of them when no names are given),
+    // after its untimed setup, as the driver sees it: the verify dump
+    // for a contract query, the bench builder for a bench-only one
+    val specs = graft.queries.QueryRegistry.all
+      .filter(q => names.isEmpty || names(q.name)).sortBy(_.name)
+    val failed = graft.queries.QuerySpec.runSetups(spark, sfDir, specs)
+    specs.filterNot(q => failed(q.name))
+      .foreach { q =>
+        val name = q.name
+        val df = if (q.oracle.isDefined) q.verify(spark, sfDir) else q.build(spark, sfDir)
         println(s"========== $name ==========")
         df.explain("formatted")
         val t0 = System.nanoTime()

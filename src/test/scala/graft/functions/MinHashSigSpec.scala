@@ -46,4 +46,29 @@ class MinHashSigSpec extends SparkSpec {
     assert(native.view.mapValues(_.toSeq).toMap ==
       declarative.view.mapValues(_.toSeq).toMap)
   }
+
+  test("minhash_sig is nullable over a non-nullable child and compiles " +
+       "under whole-stage codegen with fallback off") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    // non-nullable input through an RDD scan: a local relation would be
+    // folded at optimization time and never reach generated code
+    val schema = StructType(Seq(
+      StructField("doc_id", LongType, nullable = false),
+      StructField("text", StringType, nullable = false)))
+    val docs = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row(1L, "the quick brown fox jumps over the lazy dog"),
+      Row(2L, "a b"))), schema) // shorter than n = 3 tokens -> null
+    val out = docs.select(col("doc_id"), GraftFunctions.minhashSig(
+      graft.operators.TextOps.segmentIfUnspaced(col("text")), 3, 32).as("sig"))
+    assert(out.schema("sig").nullable)
+    val key = "spark.sql.codegen.fallback"
+    spark.conf.set(key, "false")
+    try {
+      val sig = out.collect()
+        .map(r => r.getLong(0) -> Option(r.getSeq[Int](1))).toMap
+      assert(sig(1L).map(_.size).contains(32))
+      assert(sig(2L).isEmpty)
+    } finally spark.conf.unset(key)
+  }
 }

@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Assemble CORRECTNESS_sf10.json from the sweep's logs + substitute
+"""Assemble docs/rounds/CORRECTNESS_sf10.json from the sweep's logs + substitute
 checks, with an explicit per-query check method. Unlike
 sweep_summary.py (log-scrape with later-overrides), the substitute map
 here is explicit so a FAIL line from an earlier infeasible-oracle
@@ -49,5 +49,5 @@ summary = {"sf": "10 (synthetic 100x of sf0.1, deterministic ScaleUp: 60M lineit
            "queries_checked": len(result), "queries_ok": ok,
            "substitute_checks": len(SUBS),
            "queries": dict(sorted(result.items()))}
-json.dump(summary, open('CORRECTNESS_sf10.json','w'), indent=1)
+json.dump(summary, open('docs/rounds/CORRECTNESS_sf10.json','w'), indent=1)
 print(f"{ok}/{len(oracles)} ok; missing: {missing}")

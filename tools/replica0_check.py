@@ -26,7 +26,7 @@ output exactly:
 
 The cross-replica interaction these subset checks cannot see is
 covered by the full DuckDB oracle replay at sf1 (10 replicas,
-CORRECTNESS_sf1.json).
+docs/rounds/CORRECTNESS_sf1.json).
 
 Usage: replica0_check.py <query> <src_out> <syn_out> [K=100000000]
 """

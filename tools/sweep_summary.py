@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Assemble CORRECTNESS_sf1.json from the sf1syn sweep logs.
+"""Assemble docs/rounds/CORRECTNESS_sf1.json from the sf1syn sweep logs.
 
 Inputs: one or more selfcheck logs (OK/FAIL/SKIP lines) plus the
 substitute checks for the two queries whose DuckDB oracles are
