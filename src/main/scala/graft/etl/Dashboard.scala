@@ -36,8 +36,9 @@ object Dashboard {
   // the fact WITHOUT its window metrics. When the metrics came from a
   // Window node Catalyst pruned the unused metrics AND their exchange
   // out of every dashboard plan automatically; the single-pass
-  // RunningWindow form is an opaque RDD boundary Catalyst cannot prune
-  // through, so the pruning that used to be implicit is now this
+  // RunningWindow node has no column-pruning rule that removes it when
+  // its metrics go unused (it would still shuffle and sort by
+  // location_key), so the pruning that used to be implicit is this
   // explicit call-site choice (PlanAuditSpec still pins that no
   // dashboard pays the location_key shuffle). The materialized-mart
   // twins read the metrics from parquet, where column pruning applies

@@ -195,8 +195,9 @@ object WeatherMart {
     * pins the single-pass operator against), [[validateFact]] and the
     * inline dashboards (neither reads the metrics — when the metrics
     * were a Window node Catalyst pruned them implicitly; the
-    * RunningWindow boundary makes that pruning an explicit call-site
-    * choice, see Dashboard's note).
+    * RunningWindow node has no rule that drops it when its metrics go
+    * unused, so that pruning is an explicit call-site choice, see
+    * Dashboard's note).
     *
     * The date dimension is not joined: `date_key = date_valid` for
     * every row with a non-null date. This is exact, not an
@@ -303,7 +304,8 @@ object WeatherMart {
 
   /** Validation (reference §3.6): FK null count + measure range, one
     * row. Reads no window metric, so it aggregates [[factFrame]]
-    * directly (same implicit-to-explicit pruning note as Dashboard).
+    * directly and never pays the window's exchange and sort (the
+    * RunningWindow node is not pruned when unused; see Dashboard).
     */
   def validateFact(spark: SparkSession, dir: String): DataFrame =
     factFrame(spark, dir).agg(

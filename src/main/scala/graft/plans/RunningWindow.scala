@@ -1,10 +1,19 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference,
+  AttributeSet, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.QueryPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Sort, UnaryNode}
+import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution,
+  Distribution, Partitioning}
+import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** Single-pass LAG-delta + N-row rolling sum — the fact-build window
   * re-expressed as one streaming pass over the sorted exchange.
@@ -22,17 +31,17 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
   * computes them with no group buffer, no frame re-aggregation, and
   * no per-row allocation beyond the output row itself.
   *
-  * This is the charter's sanctioned last resort — compose > custom
-  * Expression > custom plan > mapPartitions — taken at the
-  * InternalRow level (`queryExecution.toRdd`, so no Row
-  * encoder round-trip) only after the composed form was measured as
-  * the scale bottleneck on the flagship reference query. The
-  * partition+sort exchange stays fully declarative: `repartition` on
-  * the window key + `sortWithinPartitions` on the SAME total order
-  * the WindowExec form used, so plan-level guarantees (AQE sizing,
-  * shuffle reuse) are untouched and results are deterministic for the
-  * same reason the window form was (the order is total up to full-row
-  * duplicates, which are interchangeable).
+  * This is graft's one custom planner node (compose > custom
+  * Expression > custom plan), taken only after the composed form was
+  * measured as the scale bottleneck on the flagship reference query:
+  * the logical [[RunningWindowNode]], planned by [[RunningWindow.Planning]]
+  * into [[RunningWindowExec]]. The exec node states what it needs —
+  * rows clustered by the window key and sorted by (key, order) — so
+  * EnsureRequirements places the one hash exchange and the sort, on
+  * the SAME total order the WindowExec form used; AQE, SQL metrics and
+  * plan audits see the whole subtree, and results are deterministic
+  * for the same reason the window form was (the order is total up to
+  * full-row duplicates, which are interchangeable).
   *
   * Semantics parity, pinned by RunningWindowSpec against the
   * Window-form twin ([[graft.etl.StarSchema.dayDelta]]/[[graft.etl
@@ -56,38 +65,107 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
   */
 object RunningWindow {
 
-  /** The declarative exchange stage the streaming pass consumes: ONE
-    * hash exchange on the window key + partition-local sort. Public so
-    * plan audits can assert the production subtree's shape (all-
-    * broadcast star join, exactly one exchange) — the RDD boundary
-    * the pass introduces hides it from the outer plan otherwise.
-    */
-  def sortedInput(df: DataFrame, partCol: String, order: Seq[Column]): DataFrame =
-    df.repartition(col(partCol))
-      .sortWithinPartitions(col(partCol) +: order: _*)
-
   /** Append `round(lagCol − lag(lagCol), 4)` and
     * `round(sum(sumCol) over last n rows, 4)` per `partCol` group in
     * `order`. `partCol` must be LONG, `lagCol`/`sumCol` DOUBLE (the
-    * fact-build shapes; widen when a second caller needs it).
+    * fact-build shapes; widen when a second caller needs it). Builds a
+    * plan only: nothing runs until an action.
     */
   def lagDeltaAndRollingSum(df: DataFrame, partCol: String,
                             order: Seq[Column], lagCol: String,
                             sumCol: String, n: Int,
                             deltaName: String, sumName: String): DataFrame = {
-    val sorted = sortedInput(df, partCol, order)
-    val schema = sorted.schema
-    val pIdx = schema.fieldIndex(partCol)
-    val lIdx = schema.fieldIndex(lagCol)
-    val sIdx = schema.fieldIndex(sumCol)
-    require(schema(pIdx).dataType == LongType,
-      s"$partCol must be long, got ${schema(pIdx).dataType.simpleString}")
-    require(schema(lIdx).dataType == DoubleType &&
-      schema(sIdx).dataType == DoubleType,
+    Planning.install(df.sparkSession)
+    // the analyzer resolves (key +: order) against df exactly as a
+    // sortWithinPartitions would; the node keeps that ordering as its
+    // child requirement and drops the Sort itself
+    val (ordering, child) =
+      df.sortWithinPartitions(col(partCol) +: order: _*).queryExecution.analyzed match {
+        case Sort(o, false, c, _) => (o, c)
+        case p => throw new IllegalStateException(s"unexpected sort plan:\n$p")
+      }
+    val schema = df.schema
+    def attr(name: String): Attribute = child.output(schema.fieldIndex(name))
+    require(attr(partCol).dataType == LongType,
+      s"$partCol must be long, got ${attr(partCol).dataType.simpleString}")
+    require(attr(lagCol).dataType == DoubleType &&
+      attr(sumCol).dataType == DoubleType,
       s"$lagCol/$sumCol must be double")
-    val outSchema = StructType(schema.fields)
-      .add(deltaName, DoubleType).add(sumName, DoubleType)
-    val nFields = schema.fields.length
+    Bridge.ofRows(df.sparkSession, RunningWindowNode(attr(partCol), ordering,
+      attr(lagCol), attr(sumCol), n, AttributeReference(deltaName, DoubleType)(),
+      AttributeReference(sumName, DoubleType)(), child))
+  }
+
+  /** Plans [[RunningWindowNode]]; a session without it fails with "No
+    * plan for RunningWindowNode", so [[lagDeltaAndRollingSum]] installs it.
+    */
+  private[graft] object Planning extends SparkStrategy {
+    def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+      case w: RunningWindowNode =>
+        RunningWindowExec(w.partCol, w.ordering, w.lagCol, w.sumCol, w.n,
+          w.delta, w.rolling, planLater(w.child)) :: Nil
+      case _ => Nil
+    }
+
+    /** Idempotent: a session holds the strategy at most once. */
+    def install(spark: SparkSession): Unit = synchronized {
+      val exp = spark.experimental
+      if (!exp.extraStrategies.contains(this))
+        exp.extraStrategies = this +: exp.extraStrategies
+    }
+  }
+}
+
+/** The output both nodes declare: `child`'s columns plus the two
+  * window metrics `delta` and `rolling`, which the node produces.
+  */
+private[plans] trait RunningWindowOutput[T <: QueryPlan[T]] extends QueryPlan[T] {
+  self: T =>
+  def child: T
+  def delta: Attribute
+  def rolling: Attribute
+  override def output: Seq[Attribute] = child.output :+ delta :+ rolling
+  override def producedAttributes: AttributeSet = AttributeSet(Seq(delta, rolling))
+}
+
+/** The columns pass through, so ColumnPruning narrows the child to what
+  * the parent and the metrics read; nothing prunes the node itself when
+  * its metrics go unused, which is why readers of the plain star join
+  * (the inline dashboards, `validateFact`) build on `factFrame`.
+  */
+case class RunningWindowNode(partCol: Attribute, ordering: Seq[SortOrder],
+                             lagCol: Attribute, sumCol: Attribute, n: Int,
+                             delta: Attribute, rolling: Attribute,
+                             child: LogicalPlan)
+    extends UnaryNode with RunningWindowOutput[LogicalPlan] {
+  override protected def withNewChildInternal(c: LogicalPlan): RunningWindowNode =
+    copy(child = c)
+}
+
+case class RunningWindowExec(partCol: Attribute, ordering: Seq[SortOrder],
+                             lagCol: Attribute, sumCol: Attribute, n: Int,
+                             delta: Attribute, rolling: Attribute,
+                             child: SparkPlan)
+    extends UnaryExecNode with RunningWindowOutput[SparkPlan] {
+  override def requiredChildDistribution: Seq[Distribution] =
+    ClusteredDistribution(Seq(partCol)) :: Nil
+  override def requiredChildOrdering: Seq[Seq[SortOrder]] = ordering :: Nil
+  override def outputPartitioning: Partitioning = child.outputPartitioning
+  override def outputOrdering: Seq[SortOrder] = child.outputOrdering
+  override lazy val metrics: Map[String, SQLMetric] = Map(
+    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"))
+  override protected def withNewChildInternal(c: SparkPlan): RunningWindowExec =
+    copy(child = c)
+
+  override protected def doExecute(): RDD[InternalRow] = {
+    val numOutputRows = longMetric("numOutputRows")
+    def ordinal(a: Attribute): Int = child.output.indexWhere(_.exprId == a.exprId)
+    val pIdx = ordinal(partCol)
+    val lIdx = ordinal(lagCol)
+    val sIdx = ordinal(sumCol)
+    val lagName = lagCol.name
+    val sumName = sumCol.name
+    val outSchema = schema
     val ringN = n
     // Allocation discipline (the first cut boxed every input field into
     // a fresh Any array per row and measured SLOWER than WindowExec at
@@ -97,9 +175,9 @@ object RunningWindow {
     // typed getters, and the only per-row allocations are the output
     // row copy (unavoidable: downstream operators may buffer) and the
     // two boxed appended doubles.
-    val rdd = sorted.queryExecution.toRdd.mapPartitions { it =>
+    child.execute().mapPartitions { it =>
       val proj = UnsafeProjection.create(outSchema)
-      val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
+      val joined = new JoinedRow
       val append = new GenericInternalRow(2)
       var curPart = 0L
       var curPartNull = false
@@ -114,7 +192,7 @@ object RunningWindow {
         java.math.BigDecimal.valueOf(v)
           .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
       it.map { row =>
-        // NULL keys form their own group (repartition hashes them to
+        // NULL keys form their own group (the exchange hashes them to
         // one partition, the sort puts them first) — the Window twin's
         // behavior, pinned by spec; getLong on a null slot would
         // silently read 0L and merge them into the key-0 group.
@@ -129,7 +207,7 @@ object RunningWindow {
         val cur = if (curNull) 0.0 else row.getDouble(lIdx)
         if (java.lang.Double.isNaN(cur))
           throw new IllegalArgumentException(
-            s"RunningWindow: NaN in $lagCol is unsupported (NaN is the " +
+            s"RunningWindow: NaN in $lagName is unsupported (NaN is the " +
               "internal NULL sentinel); filter or null NaN rows first")
         val deltaIsNull = curNull || !hasPrev || prevNull
         if (deltaIsNull) append.setNullAt(0)
@@ -140,7 +218,7 @@ object RunningWindow {
         val sVal = if (sNull) Double.NaN else row.getDouble(sIdx)
         if (!sNull && java.lang.Double.isNaN(sVal))
           throw new IllegalArgumentException(
-            s"RunningWindow: NaN in $sumCol is unsupported (NaN is the " +
+            s"RunningWindow: NaN in $sumName is unsupported (NaN is the " +
               "internal NULL sentinel); filter or null NaN rows first")
         ring((groupRow % ringN).toInt) = sVal
         groupRow += 1L
@@ -153,9 +231,9 @@ object RunningWindow {
           k += 1L
         }
         if (any) append.update(1, round4(acc)) else append.setNullAt(1)
+        numOutputRows += 1
         proj(joined(row, append)).copy(): InternalRow
       }
     }
-    org.apache.spark.sql.graft.Bridge.internalDf(df.sparkSession, rdd, outSchema)
   }
 }

@@ -153,21 +153,7 @@ object ScaleUp {
     // and deterministic; only row-to-file assignment (round-robin,
     // with Spark's deterministic local sort) differs from the old
     // layout.
-    // SPARK_GRAFT_SCALEUP_LAYOUT=legacy reproduces the pre-r14
-    // coalesce(8) write path — ONLY for the substrate-equality
-    // evidence chain (SUBSTRATE_EQ_r15.log): generating the same SF
-    // both ways and comparing per-table count+Σhash+Σhash² proves the
-    // r14 layout change left row content untouched, which is what
-    // transfers the r13 sf1/sf10 CORRECTNESS artifacts to the
-    // rows-proportional layout. Never use legacy for measurement — it
-    // collapses scan parallelism (the r14 finding above).
-    val legacyLayout = sys.env.get("SPARK_GRAFT_SCALEUP_LAYOUT").contains("legacy")
     plans.foreach { case (name, df) =>
-      if (legacyLayout) {
-        df.coalesce(8).write.mode("overwrite").parquet(s"$out/$name.parquet")
-        System.err.println(s"[scaleup] $name (legacy layout): " +
-          s"${spark.read.parquet(s"$out/$name.parquet").count()} rows")
-      } else {
       val fixedDim = name == "region" || name == "nation"
       val outDf = if (fixedDim) df.coalesce(1) else {
         // source count is parquet-footer-only (no data scan). The
@@ -182,7 +168,6 @@ object ScaleUp {
       }
       outDf.write.mode("overwrite").parquet(s"$out/$name.parquet")
       System.err.println(s"[scaleup] $name: ${spark.read.parquet(s"$out/$name.parquet").count()} rows")
-      }
     }
     spark.stop()
   }

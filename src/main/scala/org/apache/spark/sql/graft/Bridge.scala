@@ -1,28 +1,23 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ClassicConversions.ColumnConstructorExt
 import org.apache.spark.sql.classic.ColumnConversions
 
-/** Minimal bridge into Spark 4's classic Column↔Expression converters,
-  * so graft can expose native Catalyst expressions through the public
-  * Column API. Lives in an org.apache.spark.sql subpackage purely for
-  * access; contains no Spark-internal logic.
+/** Minimal bridge into Spark 4's classic Column↔Expression converters
+  * and `Dataset.ofRows`, so graft can expose native Catalyst
+  * expressions and its one logical node ([[graft.plans.RunningWindow]])
+  * through the public DataFrame API. Lives in an org.apache.spark.sql
+  * subpackage purely for access (private[sql]); contains no
+  * Spark-internal logic.
   */
 object Bridge {
   def column(e: Expression): Column = Column(e)
   def expression(c: Column): Expression = ColumnConversions.expression(c)
 
-  /** Wrap an InternalRow RDD (rows MUST be UnsafeRow) back into a
-    * DataFrame — the return path for InternalRow-level operators
-    * ([[graft.plans.RunningWindow]]) that bypass the encoder round-trip
-    * `as[T].mapPartitions` would pay on every row. private[sql] access
-    * is why this lives here.
-    */
-  def internalDf(spark: org.apache.spark.sql.SparkSession,
-                 rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-                 schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .internalCreateDataFrame(rdd, schema)
+  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 }

@@ -3,6 +3,9 @@ package graft
 import graft.etl.{Cube, Dashboard, WeatherMart}
 import graft.operators.{AsOfJoin, Corpus, Dedup, Sessionize, Similarity}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  BroadcastQueryStageExec, QueryStageExec}
 import org.apache.spark.sql.functions._
 
 /** Physical-plan audit: pins the scale-critical plan shapes from
@@ -27,26 +30,40 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
-  // fact's window metrics now come from the single-pass RunningWindow,
-  // whose RDD boundary hides the upstream subtree from fact()'s own
-  // explain — so the star-join and exchange audits pin the EXACT
-  // subtree the pass consumes (RunningWindow.sortedInput over
-  // factFrame, the same call fact() makes internally). That subtree's
-  // joins: staging ⋈ broadcast(current dim_location) on the postal
-  // code, × broadcast(dim_source); the date dimension is a not-null
-  // filter on the staging date, not a join.
+  // The fact's star join: staging ⋈ broadcast(current dim_location) on
+  // the postal code, × broadcast(dim_source); the date dimension is a
+  // not-null filter on the staging date, not a join. Above it, the
+  // RunningWindow node asks for location_key clustering and the window
+  // order, so EnsureRequirements places one exchange and one sort. The
+  // fact rows stay inside the plan: an ExistingRDD scan may only feed a
+  // broadcast dimension (dim_location's rank is pinned by
+  // StarSchema.globalRank), never the fact side.
   test("fact star join is all-broadcast: no sort-merge join, no fact-side shuffle for joins") {
-    val plan = finalPlan(graft.plans.RunningWindow.sortedInput(
-      WeatherMart.factFrame(spark, sf()), "location_key", WeatherMart.factOrder))
+    val df = WeatherMart.fact(spark, sf())
+    val plan = finalPlan(df)
     assert(!plan.contains("SortMergeJoin"), s"fact join degraded to SMJ:\n$plan")
     assert(plan.contains("BroadcastHashJoin"), plan)
+    assert(plan.contains("RunningWindow"), s"fact window node missing:\n$plan")
+    // RDD scans outside every broadcast (dimension) subtree
+    def factSideRddScans(p: SparkPlan): Int = p match {
+      case _: BroadcastQueryStageExec => 0
+      case _: RDDScanExec => 1
+      case a: AdaptiveSparkPlanExec => factSideRddScans(a.executedPlan)
+      case q: QueryStageExec => factSideRddScans(q.plan)
+      case _ => p.children.map(factSideRddScans).sum
+    }
+    assert(factSideRddScans(df.queryExecution.executedPlan) == 0,
+      s"fact rows come from an RDD, not from the planned star join:\n$plan")
   }
 
   test("both fact window metrics share a single location_key exchange") {
-    val plan = finalPlan(graft.plans.RunningWindow.sortedInput(
-      WeatherMart.factFrame(spark, sf()), "location_key", WeatherMart.factOrder))
+    val plan = finalPlan(WeatherMart.fact(spark, sf()))
     val n = "hashpartitioning\\(location_key".r.findAllMatchIn(plan).length
     assert(n == 1, s"expected exactly 1 window exchange, saw $n:\n$plan")
+    val sorts = "\\bSort \\[".r.findAllMatchIn(plan).length
+    assert(sorts == 1, s"expected exactly 1 sort under the window node, saw $sorts:\n$plan")
+    assert("RunningWindow[^\n]*\n[^\n]*Sort \\[location_key".r.findFirstIn(plan).isDefined,
+      s"the window node does not read the location_key sort directly:\n$plan")
   }
 
   test("fact frame scans lineitem once: no date-dimension subtree") {

@@ -15,7 +15,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * without an oracle is bench-only, so the bench-only set is pinned.
   * Source audits keep the mains' session setup and byte counting in
   * [[GraftSession]] instead of per-main copies, and query registrations
-  * in the registry instead of a second map in SparkEntry.
+  * in the registry instead of a second map in SparkEntry, and keep every
+  * operator inside Catalyst (no RDD round-trip out of the planner).
   */
 class ContractSurfaceSpec extends AnyFunSuite {
 
@@ -66,6 +67,18 @@ class ContractSurfaceSpec extends AnyFunSuite {
       }
       assert(hits == Seq("GraftSession.scala"),
         s"$token must occur once, in GraftSession.scala (found in: $hits)")
+    }
+  }
+
+  test("no RDD islands: no operator leaves the planner through an " +
+       "InternalRow RDD and back") {
+    assert(sources.nonEmpty, "run from the repository root")
+    for (token <- Seq("internalCreateDataFrame", "toRdd.mapPartitions")) {
+      val hits = sources.filter { p =>
+        new String(java.nio.file.Files.readAllBytes(p), "UTF-8").contains(token)
+      }.map(_.getFileName.toString)
+      assert(hits.isEmpty,
+        s"$token in $hits: plan the operator as a logical + exec node instead")
     }
   }
 

@@ -102,4 +102,46 @@ class RunningWindowSpec extends SparkSpec {
       .withColumn("s", round(sum("p").over(w.rowsBetween(-6, 0)), 4))
     assert(fast.exceptAll(slow).isEmpty && slow.exceptAll(fast).isEmpty)
   }
+
+  test("building the fact over its inputs plans only: no Spark job runs " +
+       "before an action") {
+    // the inputs' own construction may run jobs (parquet schema reads,
+    // dim_location's rank pin); the window node itself must add none
+    val staging = WeatherMart.staging(spark, sfDir)
+    val dimLocation = WeatherMart.dimLocation(spark, sfDir)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    graft.core.GraftSession.drainListeners(spark)
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      WeatherMart.fact(staging, dimLocation)
+      graft.core.GraftSession.drainListeners(spark)
+    } finally spark.sparkContext.removeSparkListener(counter)
+    assert(jobs.get == 0, s"building the fact started ${jobs.get} job(s)")
+  }
+
+  test("a fresh session plans the node, which counts its output rows") {
+    val fresh = spark.newSession()
+    assert(!fresh.experimental.extraStrategies.contains(RunningWindow.Planning))
+    val fast = WeatherMart.fact(fresh, sfDir)
+    val n = fast.count()
+    assert(n > 0 && n == WeatherMart.factFrame(fresh, sfDir).count())
+    fast.collect()
+    val node = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collectFirst(fast.queryExecution.executedPlan) { case w: RunningWindowExec => w }
+    assert(node.exists(_.metrics("numOutputRows").value == n),
+      s"no RunningWindow node counting $n rows:\n${fast.queryExecution.executedPlan}")
+  }
+
+  test("the strategy is registered once however many frames are built") {
+    RunningWindow.lagDeltaAndRollingSum(spark.range(3).toDF("loc")
+      .select(col("loc"), col("loc").cast("double").as("v")),
+      "loc", Seq(col("v")), "v", "v", n = 2, "d", "s")
+    WeatherMart.fact(spark, sfDir)
+    WeatherMart.fact(spark, sfDir)
+    assert(spark.experimental.extraStrategies.count(_ == RunningWindow.Planning) == 1)
+  }
 }

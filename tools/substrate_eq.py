@@ -1,14 +1,13 @@
 #!/usr/bin/env python3
-"""Substrate content-equality check (VERDICT r14 #1 evidence chain).
+"""Substrate content-equality check for two data directories.
 
-Compares two synthetic-substrate dirs table-by-table on four
+Compares two dirs of parquet tables table-by-table on four
 layout-independent aggregates of the full-row DuckDB hash:
 count, sum(hash), bit_xor(hash), and sum(low32(hash)^2) — commutative,
-so file layout / row order cannot mask or fake a difference.  Used to
-prove the r14 rows-proportional ScaleUp layout carries the SAME row
-content as the pre-r14 coalesce(8) layout (generate the same SF both
-ways via SPARK_GRAFT_SCALEUP_LAYOUT=legacy, then run this), which is
-what transfers the r13 sf1/sf10 CORRECTNESS artifacts.
+so file layout / row order cannot mask or fake a difference.  Use it
+to show that two generations of a substrate (e.g. two ScaleUp runs, or
+one before and one after a change to how files are written) carry the
+same row content whatever their file and row-group layout.
 
 Usage: substrate_eq.py DIR_A DIR_B [label]
 Exits non-zero on any mismatch; prints one line per table either way.
