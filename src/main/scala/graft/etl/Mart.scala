@@ -30,16 +30,18 @@ object Mart {
     * share the subtree across them; unpinned, each consumer would re-run
     * the bucketed surrogate rank. One build also gives referential
     * integrity by construction: every fact `location_key` is a key of
-    * the written `dim_location`.
+    * the written `dim_location`. The date, band and precipitation dims
+    * and the fact share one staging frame (one schema read, not four).
     */
   def materialize(spark: SparkSession, srcDir: String, outDir: String): Unit = {
     def write(df: DataFrame, name: String): Unit =
       df.write.mode("overwrite").parquet(s"$outDir/$name")
+    val staging = WeatherMart.staging(spark, srcDir)
     val dimLocation = graft.core.Pin.pin(WeatherMart.dimLocation(spark, srcDir))
-    write(WeatherMart.dimDate(spark, srcDir), "dim_date")
+    write(WeatherMart.dimDate(staging), "dim_date")
     write(dimLocation, "dim_location")
-    write(WeatherMart.dimBand(spark, srcDir), "dim_band")
-    write(WeatherMart.dimPrecipType(spark, srcDir), "dim_precip_type")
+    write(WeatherMart.dimBand(staging), "dim_band")
+    write(WeatherMart.dimPrecipType(staging), "dim_precip_type")
     write(WeatherMart.dimSource(spark), "dim_source")
     write(WeatherMart.normalizedLocation(dimLocation), "normalized_location")
     // REBALANCE by the partition column before the write (guide §6):
@@ -51,7 +53,7 @@ object Mart {
     // year lands as one well-sized file while at 100 TB a skewed year
     // is SPLIT into advisory-sized chunks — scale-adaptive in both
     // directions, no constant tuned for either regime.
-    WeatherMart.fact(WeatherMart.staging(spark, srcDir), dimLocation)
+    WeatherMart.fact(staging, dimLocation)
       .withColumn("year", year(col("date_key")))
       .hint("rebalance", col("year"))
       .write.mode("overwrite").partitionBy("year")
@@ -101,19 +103,19 @@ object Mart {
     * partitions ([[refreshFact]]'s unit of work). An update row
     * REPLACES the stored row with its key; a new key INSERTS.
     *
-    * Only the year partitions present in the feed are ever read or
-    * written: the stored side is scanned WITH a partition filter on
-    * the feed's years (directory-level pruning — the decade-sized
-    * table contributes only its touched years), merged content =
-    * stored∖feed-keys ∪ feed, and dynamic partition overwrite
-    * rewrites exactly those year directories. Untouched years' files
-    * are byte-identical after the merge (spec-pinned, the
-    * expirePartitions precedent).
+    * Only the feed's year partitions are read or written: the stored
+    * side is scanned with a partition filter on those years, and
+    * stored∖feed-keys ∪ feed goes to [[refreshFact]]. Untouched years'
+    * files stay byte-identical (spec-pinned). Re-running the same merge
+    * converges: replayed feed keys anti-join their own previous
+    * application away.
     *
-    * The merged frame is pinned ([[graft.core.Pin]]) before the
-    * write because it reads the directories the write replaces.
-    * Re-running the same merge converges: replayed feed keys
-    * anti-join their own previous application away.
+    * The scan, anti-join, union and write are one query that reads the
+    * directories it replaces. Dynamic overwrite makes that safe: tasks
+    * write below `.spark-staging-<job>`, and the touched years are
+    * swapped in only at job commit, after every task has read them; a
+    * failed job leaves the stored files as they were. Only the feed is
+    * pinned (three consumers read it).
     */
   def mergeFact(spark: SparkSession, outDir: String, updates: DataFrame,
                 keys: Seq[String] = Seq("date_key", "l_orderkey",
@@ -132,14 +134,9 @@ object Mart {
     if (touched.isEmpty) return
     val stored = table(spark, outDir, FactTable)
       .filter(col("year").isin(touched: _*))
-    val merged = stored
+    refreshFact(spark, outDir, stored
       .join(up.select(keys.map(col): _*), keys, "left_anti")
-      .unionByName(up.select(stored.columns.map(col): _*))
-      .transform(graft.core.Pin.pin(_))
-    merged.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("year")
-      .parquet(s"$outDir/$FactTable")
+      .unionByName(up.select(stored.columns.map(col): _*)))
   }
 
   /** Fact for a date range — the filter on the partition column prunes

@@ -17,10 +17,10 @@ import org.apache.spark.sql.functions._
   *                               inclusive BETWEEN banding stays gap-free)
   *
   * Star-join strategy at scale: the fact (lineitem) side never shuffles
-  * for a join. The location and source dimensions are broadcast; the date
-  * dimension is not joined at all, since its key is the staging date
-  * itself (see [[factFrame]]). The only wide exchange in the fact build is
-  * the window partition by location_key, which both window metrics share.
+  * for a join. The location dimension is broadcast; the date and source
+  * dimensions are not joined: their keys are the staging date and a
+  * constant (see [[factFrame]]). The only wide exchange in the fact build
+  * is the window partition by location_key, which both window metrics share.
   *
   * Builders that [[Mart.materialize]] shares take their upstream frames
   * (a frame-taking core) plus a thin `(spark, dir)` wrapper that derives
@@ -33,6 +33,7 @@ object WeatherMart {
   val SnowThreshold = 0.06
   val RainThreshold = 0.05
   val ValidFrom = "2026-01-01"
+  val SourceKey = 1L
 
   /** Extract/Load: staging projection of the measurement table
     * (reference STG_FORECAST_DAY, ETL_GlobalWeather_DB.sql:24-27).
@@ -61,19 +62,19 @@ object WeatherMart {
       .when(precip > RainThreshold, "Rain")
       .otherwise("None")
 
-  def dimDate(spark: SparkSession, dir: String): DataFrame =
-    StarSchema.dimDate(staging(spark, dir), col("date_valid"))
+  def dimDate(staging: DataFrame): DataFrame = StarSchema.dimDate(staging, col("date_valid"))
+
+  def dimDate(spark: SparkSession, dir: String): DataFrame = dimDate(staging(spark, dir))
 
   /** Location dimension: supplier enriched with nation/region names
     * (reference DIM_LOCATION postal/city/country). Nation and region are
     * tiny → broadcast.
     */
-  def dimLocation(spark: SparkSession, dir: String): DataFrame = {
+  def dimLocation(spark: SparkSession, dir: String): DataFrame =
     StarSchema.scd1(locationNatural(spark, dir),
       naturalKey = Seq("postal_code", "city_name", "country", "region_name"),
       orderBy = Seq("postal_code"),
       keyName = "location_key", validFrom = ValidFrom)
-  }
 
   /** Natural location rows (the scd1 input): supplier ⋈ nation ⋈ region. */
   def locationNatural(spark: SparkSession, dir: String): DataFrame =
@@ -157,23 +158,24 @@ object WeatherMart {
       attrs = Seq("city_name", "country", "region_name"),
       keyName = "location_key", asOf = "2026-03-01")
 
-  def dimBand(spark: SparkSession, dir: String): DataFrame =
-    staging(spark, dir)
-      .select(weatherBand(col("band_q")).as("weather_band"))
-      .distinct().orderBy("weather_band")
+  def dimBand(staging: DataFrame): DataFrame =
+    staging.select(weatherBand(col("band_q")).as("weather_band")).distinct()
+
+  def dimBand(spark: SparkSession, dir: String): DataFrame = dimBand(staging(spark, dir))
+
+  def dimPrecipType(staging: DataFrame): DataFrame =
+    staging.select(precipitationType(col("snowfall_in"), col("precipitation_in"))
+      .as("precipitation_type")).distinct()
 
   def dimPrecipType(spark: SparkSession, dir: String): DataFrame =
-    staging(spark, dir)
-      .select(precipitationType(col("snowfall_in"), col("precipitation_in"))
-        .as("precipitation_type"))
-      .distinct().orderBy("precipitation_type")
+    dimPrecipType(staging(spark, dir))
 
   /** Static single-row source dimension (reference DIM_SOURCE,
     * ETL_GlobalWeather_DB.sql:108-113).
     */
   def dimSource(spark: SparkSession): DataFrame =
     spark.range(1).select(
-      lit(1L).as("source_key"),
+      lit(SourceKey).as("source_key"),
       lit("graft").as("provider"),
       lit("testdata").as("dataset_name"),
       lit("parquet").as("ingest_method"))
@@ -182,9 +184,7 @@ object WeatherMart {
     * ETL_GlobalWeather_DB.sql:150-152).
     */
   def normalizedLocation(dimLocation: DataFrame): DataFrame =
-    dimLocation
-      .select("postal_code", "city_name", "country", "region_name")
-      .orderBy("postal_code")
+    dimLocation.select("postal_code", "city_name", "country", "region_name")
 
   def normalizedLocation(spark: SparkSession, dir: String): DataFrame =
     normalizedLocation(dimLocation(spark, dir))
@@ -206,8 +206,9 @@ object WeatherMart {
     * non-null date matches exactly one dimension row (no fan-out, no
     * loss) and the inner join could only drop NULL dates. The join
     * would cost a second lineitem scan and a distinct per build, and
-    * Catalyst cannot prove it a no-op itself. The DuckDB `factSql` oracle
-    * also states the fact without a date join.
+    * Catalyst cannot prove it a no-op itself. The source dimension is one
+    * static row, so `source_key` is the constant [[SourceKey]]. The DuckDB
+    * `factSql` oracle states the fact the same way, with neither join.
     */
   private[graft] def factFrame(staging: DataFrame, dimLocation: DataFrame): DataFrame = {
     val dl = dimLocation
@@ -216,13 +217,12 @@ object WeatherMart {
     staging
       .filter(col("date_valid").isNotNull)
       .join(broadcast(dl), staging("loc_ref") === dl("postal_code"))
-      .crossJoin(broadcast(dimSource(staging.sparkSession).select("source_key")))
       .select(
         col("date_valid").as("date_key"), col("location_key"),
         weatherBand(col("band_q")).as("weather_band"),
         precipitationType(col("snowfall_in"), col("precipitation_in"))
           .as("precipitation_type"),
-        col("source_key"),
+        lit(SourceKey).as("source_key"),
         col("l_orderkey"), col("l_linenumber"),
         col("avg_temp_f"), col("precipitation_in"), col("snowfall_in"))
   }

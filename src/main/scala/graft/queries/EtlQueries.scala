@@ -170,16 +170,19 @@ object EtlQueries {
     QuerySpec("dim_band", (s, d) => WeatherMart.dimBand(s, d),
       sql(s"""SELECT DISTINCT $bandCase AS weather_band
          |FROM (SELECT l_quantity AS band_q FROM lineitem)
-         |ORDER BY weather_band""".stripMargin)),
+         |ORDER BY weather_band""".stripMargin),
+      sortKeys = by("weather_band")),
     QuerySpec("dim_precip_type", (s, d) => WeatherMart.dimPrecipType(s, d),
       sql(s"""SELECT DISTINCT $precipCase AS precipitation_type
          |FROM (SELECT l_tax AS snowfall_in, l_discount AS precipitation_in FROM lineitem)
-         |ORDER BY precipitation_type""".stripMargin)),
+         |ORDER BY precipitation_type""".stripMargin),
+      sortKeys = by("precipitation_type")),
     QuerySpec("dim_source", (s, _) => WeatherMart.dimSource(s),
       sql("""SELECT CAST(1 AS BIGINT) AS source_key, 'graft' AS provider,
         |  'testdata' AS dataset_name, 'parquet' AS ingest_method""".stripMargin)),
     QuerySpec("normalized_3nf", (s, d) => WeatherMart.normalizedLocation(s, d),
-      sql(s"SELECT * FROM ($locNaturalSql) ORDER BY postal_code")),
+      sql(s"SELECT * FROM ($locNaturalSql) ORDER BY postal_code"),
+      sortKeys = by("postal_code")),
     // the reference's other two 3NF tables (NORMALIZED.DATE /
     // NORMALIZED.WEATHER_DAY, ETL_GlobalWeather_DB.sql:148-175):
     // surrogate-free date attributes and the natural-key measure table

@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
   BroadcastQueryStageExec, QueryStageExec}
+import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 import org.apache.spark.sql.functions._
 
 /** Physical-plan audit: pins the scale-critical plan shapes from
@@ -31,12 +32,12 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   // The fact's star join: staging ⋈ broadcast(current dim_location) on
-  // the postal code, × broadcast(dim_source); the date dimension is a
-  // not-null filter on the staging date, not a join. Above it, the
-  // RunningWindow node asks for location_key clustering and the window
-  // order, so EnsureRequirements places one exchange and one sort. The
-  // fact rows stay inside the plan: an ExistingRDD scan may only feed a
-  // broadcast dimension (dim_location's rank is pinned by
+  // the postal code; the date dimension is a not-null filter on the
+  // staging date and the source key a constant, neither a join. Above
+  // it, the RunningWindow node asks for location_key clustering and the
+  // window order, so EnsureRequirements places one exchange and one
+  // sort. The fact rows stay inside the plan: an ExistingRDD scan may
+  // only feed a broadcast dimension (dim_location's rank is pinned by
   // StarSchema.globalRank), never the fact side.
   test("fact star join is all-broadcast: no sort-merge join, no fact-side shuffle for joins") {
     val df = WeatherMart.fact(spark, sf())
@@ -44,16 +45,22 @@ class PlanAuditSpec extends SparkSpec {
     assert(!plan.contains("SortMergeJoin"), s"fact join degraded to SMJ:\n$plan")
     assert(plan.contains("BroadcastHashJoin"), plan)
     assert(plan.contains("RunningWindow"), s"fact window node missing:\n$plan")
-    // RDD scans outside every broadcast (dimension) subtree
-    def factSideRddScans(p: SparkPlan): Int = p match {
+    // nodes outside every broadcast (dimension) subtree
+    def factSide(p: SparkPlan)(is: SparkPlan => Boolean): Int = p match {
       case _: BroadcastQueryStageExec => 0
-      case _: RDDScanExec => 1
-      case a: AdaptiveSparkPlanExec => factSideRddScans(a.executedPlan)
-      case q: QueryStageExec => factSideRddScans(q.plan)
-      case _ => p.children.map(factSideRddScans).sum
+      case _ if is(p) => 1
+      case a: AdaptiveSparkPlanExec => factSide(a.executedPlan)(is)
+      case q: QueryStageExec => factSide(q.plan)(is)
+      case _ => p.children.map(factSide(_)(is)).sum
     }
-    assert(factSideRddScans(df.queryExecution.executedPlan) == 0,
+    val executed = df.queryExecution.executedPlan
+    assert(factSide(executed)(_.isInstanceOf[RDDScanExec]) == 0,
       s"fact rows come from an RDD, not from the planned star join:\n$plan")
+    // the source key is a constant: no nested-loop cross join with the
+    // one-row source dimension (dim_location's own bucket offsets, a
+    // non-equi join inside its broadcast subtree, do not count)
+    assert(factSide(executed)(_.isInstanceOf[BroadcastNestedLoopJoinExec]) == 0,
+      s"fact crosses in the one-row source dimension:\n$plan")
   }
 
   test("both fact window metrics share a single location_key exchange") {
@@ -631,9 +638,9 @@ class PlanAuditSpec extends SparkSpec {
 
   test("every contract query stays free of cartesian products and " +
        "unpartitioned windows") {
-    // the 1-row dim_source cross join broadcasts; a CartesianProduct node
-    // anywhere means an equi-join lost its keys. A window without a real
-    // partition key funnels the frame through one task however large.
+    // a CartesianProduct node anywhere means an equi-join lost its keys.
+    // A window without a real partition key funnels the frame through
+    // one task however large.
     SparkEntry.queries.foreach { case (name, fn) =>
       val df = fn(spark, sf())
       val plan = df.queryExecution.executedPlan.toString

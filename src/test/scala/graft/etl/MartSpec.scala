@@ -2,6 +2,13 @@ package graft.etl
 
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution,
+  RDDScanExec, SparkPlan, UnionExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  AdaptiveSparkPlanHelper, BroadcastQueryStageExec, QueryStageExec}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -173,5 +180,109 @@ class MartSpec extends SparkSpec {
       s"error must name the violated contract: ${ex.getMessage}")
     assert(Mart.table(spark, out, Mart.FactTable).count() == before,
       "failed merge mutated the mart")
+  }
+
+  /** Every file under `dir` with its (length, mtime), and every
+    * directory by name only (adding a file touches its mtime).
+    */
+  private def tree(dir: String): Map[String, (Long, Long)] = {
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def walk(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(p).toSeq.flatMap(st =>
+        if (st.isDirectory) st +: walk(st.getPath) else Seq(st))
+    walk(root).map(st => st.getPath.toString ->
+      (if (st.isDirectory) (-1L, 0L) else (st.getLen, st.getModificationTime))).toMap
+  }
+
+  /** A materialized mart and a feed correcting every 5th row of its
+    * oldest year: (mart dir, touched year, feed).
+    */
+  private def martAndFeed(name: String): (String, Int, DataFrame) = {
+    val out = Files.createTempDirectory(name).toString
+    Mart.materialize(spark, sf(), out)
+    val fact = Mart.table(spark, out, Mart.FactTable)
+    val touched = fact.select(min("year")).head().getInt(0)
+    val feed = fact.filter(col("year") === touched &&
+        pmod(col("l_orderkey"), lit(5)) === 0)
+      .drop("year")
+      .withColumn("avg_temp_f", col("avg_temp_f") + 100.0)
+      .localCheckpoint()
+    (out, touched, feed)
+  }
+
+  test("mergeFact streams the stored fact into its write: one query " +
+       "scans, anti-joins, unions and writes, no pinned merged frame") {
+    val (out, _, feed) = martAndFeed("graft_mart_stream")
+    val plans = new AdaptiveSparkPlanHelper {}
+    val writes = collection.mutable.ArrayBuffer[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (plans.find(qe.executedPlan)(_.isInstanceOf[DataWritingCommandExec]).nonEmpty)
+          writes.synchronized(writes += qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Mart.mergeFact(spark, out, feed)
+      graft.core.GraftSession.drainListeners(spark)
+    } finally spark.listenerManager.unregister(listener)
+    assert(writes.size == 1, s"expected one write query, saw ${writes.size}")
+    val write = writes.head
+    // the stored side is a partition-pruned parquet scan of the fact,
+    // read by the write query itself (a pinned merged frame shows as
+    // one Scan ExistingRDD and no file scan)
+    val factScans = plans.collect(write) {
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.getName == Mart.FactTable) => s
+    }
+    assert(factScans.nonEmpty && factScans.forall(_.partitionFilters.nonEmpty),
+      s"the write does not scan the stored fact by year:\n$write")
+    // the merged side is the planned union; outside the broadcast feed
+    // keys, its stored branch streams from the file scan, not an RDD
+    val unions = plans.collect(write) { case u: UnionExec => u }
+    assert(unions.size == 1, s"the write does not read the union:\n$write")
+    def streamed(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: BroadcastQueryStageExec | _: BroadcastExchangeLike => Nil
+      case a: AdaptiveSparkPlanExec => streamed(a.executedPlan)
+      case q: QueryStageExec => streamed(q.plan)
+      case _ => p +: p.children.flatMap(streamed)
+    }
+    val storedBranch = unions.head.children.map(streamed)
+      .filter(_.exists(_.isInstanceOf[FileSourceScanExec]))
+    assert(storedBranch.size == 1 &&
+      !storedBranch.head.exists(_.isInstanceOf[RDDScanExec]),
+      s"the stored branch of the merge reads an RDD:\n$write")
+  }
+
+  test("mergeFact failing mid-write leaves the stored fact as it was: " +
+       "files, row count, no staging directory") {
+    val (out, touched, feed) = martAndFeed("graft_mart_abort")
+    val factDir = s"$out/${Mart.FactTable}"
+    val before = tree(factDir)
+    val rows = Mart.table(spark, out, Mart.FactTable).count()
+    // a touched-year file whose footer reads (schema inference passes)
+    // but whose row groups do not decode: the write job fails only
+    // once its tasks read the stored side
+    val yearDir = new java.io.File(s"$factDir/year=$touched")
+    val good = yearDir.listFiles().filter(_.getName.endsWith(".parquet")).head
+    val bytes = Files.readAllBytes(good.toPath)
+    val footer = java.nio.ByteBuffer.wrap(bytes, bytes.length - 8, 4)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+    java.util.Arrays.fill(bytes, 4, bytes.length - 8 - footer, 0xff.toByte)
+    val corrupt = new java.io.File(yearDir, "part-99999-corrupt.snappy.parquet")
+    Files.write(corrupt.toPath, bytes)
+
+    val ex = intercept[Exception](Mart.mergeFact(spark, out, feed))
+    assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains(corrupt.getName)),
+      s"the merge failed before reading the stored side: $ex")
+    assert(corrupt.delete())
+    val after = tree(factDir)
+    assert(after.keys.forall(!_.contains(".spark-staging")),
+      s"a staging directory survived the failed merge: ${after.keys}")
+    assert(after == before, "the failed merge changed the stored fact: " +
+      s"${(after.toSet diff before.toSet) ++ (before.toSet diff after.toSet)}")
+    assert(Mart.table(spark, out, Mart.FactTable).count() == rows)
   }
 }
