@@ -227,20 +227,14 @@ object StarSchema {
     * snapshot on the business key; the `is_current` join residual
     * leaves historical rows unmatched, so they exit verbatim through
     * the untouched branch of a 3-way union over that one joined frame.
-    * The 1-row max-key aggregate broadcasts; the surrogate window runs
+    * The 1-row max-key aggregate reads that joined frame and
+    * broadcasts; the surrogate window runs
     * only over NEW rows (a dimension-sized, not fact-sized, set).
     */
   def scd2Merge(dim: DataFrame, snapshot: DataFrame, businessKey: Seq[String],
                 attrs: Seq[String], keyName: String, asOf: String): DataFrame = {
     val outCols = (keyName +: (businessKey ++ attrs)) ++
       Seq("valid_from", "valid_to", "is_current")
-    // The dim side is read by two otherwise-independent jobs — the
-    // merge join and the 1-row max-key aggregate. When the caller
-    // derives it inline (rather than reading a stored table) each of
-    // those replays the whole dim-build lineage; pin it once — it is
-    // dimension-sized by definition.
-    val dimM = graft.core.Pin.pin(dim, eager = false)
-    val current = dimM.filter(col("is_current"))
     val snap = snapshot.select((businessKey ++ attrs).map(col): _*).distinct()
 
     val attrDiffers: Column = attrs
@@ -258,10 +252,10 @@ object StarSchema {
     // §2.4): the `is_current` residual keeps history rows unmatched,
     // so they surface as (hist, null-snap) rows and ride the untouched
     // branch below — history needs no separate union branch re-reading
-    // dimM, the final plan is a 3-way union over ONE pinned frame, and
+    // the dim, the final plan is a 3-way union over ONE pinned frame, and
     // the snapshot side still matches only current versions exactly as
     // before (Scd2MergeSpec pins the twice-merged history behavior).
-    val joined = dimM.as("cur").join(snap.as("snap"),
+    val joined = dim.as("cur").join(snap.as("snap"),
       businessKey.map(k => col(s"cur.$k") <=> col(s"snap.$k")).reduce(_ && _) &&
         col("cur.is_current"),
       "full_outer")
@@ -287,8 +281,11 @@ object StarSchema {
       .filter(col(s"snap.${businessKey.head}").isNotNull &&
         (col(s"cur.$keyName").isNull || attrDiffers))
       .select((businessKey ++ attrs).map(c => col(s"snap.$c").as(c)): _*)
-    val maxKey = current.agg(
-      coalesce(max(col(keyName)), lit(0L)).as("__max_key"))
+    // every dim row sits on the cur side of the full outer join, so
+    // the pinned frame also yields the max key (duplicate matches do
+    // not move a max), and the dim has one consumer
+    val maxKey = joined.filter(col("cur.is_current")).agg(
+      coalesce(max(col(s"cur.$keyName")), lit(0L)).as("__max_key"))
     val inserted = globalRank(incoming, businessKey, "__new_rank")
       .crossJoin(broadcast(maxKey))
       .withColumn(keyName, (col("__max_key") + col("__new_rank")).cast("long"))

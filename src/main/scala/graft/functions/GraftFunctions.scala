@@ -91,79 +91,51 @@ object GraftFunctions {
       SortedArrayJaccard(org.apache.spark.sql.graft.Bridge.expression(a),
         org.apache.spark.sql.graft.Bridge.expression(b)))
 
-  private[functions] def builder(args: Seq[Expression]): Expression = args match {
-    case Seq(c) => RollingFingerprint(c, 64)
-    case Seq(c, Literal(w: Int, _)) => RollingFingerprint(c, w)
-    case _ => throw new IllegalArgumentException(
-      "rolling_fingerprint(text[, window_literal])")
+  /** graft's SQL functions, one row each: name, expression class (its
+    * `DESCRIBE FUNCTION` entry) and builder. [[register]] and
+    * [[GraftExtensions]] both read this table, so a function cannot
+    * reach one path and miss the other.
+    */
+  private[functions] val sqlFunctions
+      : Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] = {
+    def usage(signature: String) = throw new IllegalArgumentException(signature)
+    Seq(
+      ("rolling_fingerprint", classOf[RollingFingerprint], {
+        case Seq(c) => RollingFingerprint(c, 64)
+        case Seq(c, Literal(w: Int, _)) => RollingFingerprint(c, w)
+        case _ => usage("rolling_fingerprint(text[, window_literal])")
+      }),
+      ("vector_dot", classOf[VectorDot], {
+        case Seq(a, b) => VectorDot(a, b)
+        case _ => usage("vector_dot(a, b)")
+      }),
+      ("vector_cosine", classOf[VectorCosine], {
+        case Seq(a, b) => VectorCosine(a, b)
+        case _ => usage("vector_cosine(a, b)")
+      }),
+      ("word_shingles", classOf[WordShingles], {
+        case Seq(c, Literal(n: Int, _)) => WordShingles(c, n)
+        case _ => usage("word_shingles(text, n_literal)")
+      }),
+      ("simhash64", classOf[SimHash64], {
+        case Seq(c) => SimHash64(c, 3)
+        case Seq(c, Literal(n: Int, _)) => SimHash64(c, n)
+        case _ => usage("simhash64(text[, n_literal])")
+      }),
+      ("repetition_stats", classOf[RepetitionStats], {
+        case Seq(c, Literal(n: Int, _)) => RepetitionStats(c, n)
+        case _ => usage("repetition_stats(text, n_literal)")
+      }))
   }
-
-  private[functions] def dotBuilder(args: Seq[Expression]): Expression = args match {
-    case Seq(a, b) => VectorDot(a, b)
-    case _ => throw new IllegalArgumentException("vector_dot(a, b)")
-  }
-
-  private[functions] def cosineBuilder(args: Seq[Expression]): Expression = args match {
-    case Seq(a, b) => VectorCosine(a, b)
-    case _ => throw new IllegalArgumentException("vector_cosine(a, b)")
-  }
-
-  private[functions] def shinglesBuilder(args: Seq[Expression]): Expression =
-    args match {
-      case Seq(c, Literal(n: Int, _)) => WordShingles(c, n)
-      case _ => throw new IllegalArgumentException("word_shingles(text, n_literal)")
-    }
-
-  private[functions] def simhashBuilder(args: Seq[Expression]): Expression =
-    args match {
-      case Seq(c) => SimHash64(c, 3)
-      case Seq(c, Literal(n: Int, _)) => SimHash64(c, n)
-      case _ => throw new IllegalArgumentException("simhash64(text[, n_literal])")
-    }
-
-  private[functions] val ident = FunctionIdentifier("rolling_fingerprint")
-  private[functions] val info = new ExpressionInfo(
-    classOf[RollingFingerprint].getName, "rolling_fingerprint")
-  private[functions] val dotIdent = FunctionIdentifier("vector_dot")
-  private[functions] val dotInfo = new ExpressionInfo(
-    classOf[VectorDot].getName, "vector_dot")
-  private[functions] val cosineIdent = FunctionIdentifier("vector_cosine")
-  private[functions] val cosineInfo = new ExpressionInfo(
-    classOf[VectorCosine].getName, "vector_cosine")
-  private[functions] val shinglesIdent = FunctionIdentifier("word_shingles")
-  private[functions] val shinglesInfo = new ExpressionInfo(
-    classOf[WordShingles].getName, "word_shingles")
-  private[functions] val simhashIdent = FunctionIdentifier("simhash64")
-  private[functions] val simhashInfo = new ExpressionInfo(
-    classOf[SimHash64].getName, "simhash64")
-  private[functions] def repetitionBuilder(args: Seq[Expression]): Expression =
-    args match {
-      case Seq(c, Literal(n: Int, _)) => RepetitionStats(c, n)
-      case _ => throw new IllegalArgumentException(
-        "repetition_stats(text, n_literal)")
-    }
-  private[functions] val repetitionIdent = FunctionIdentifier("repetition_stats")
-  private[functions] val repetitionInfo = new ExpressionInfo(
-    classOf[RepetitionStats].getName, "repetition_stats")
 
   /** Register into an already-built session (idempotent), so
     * `expr("rolling_fingerprint(text, 64)")` and spark.sql work.
     */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("rolling_fingerprint", builder, "scala_udf")
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("vector_dot", dotBuilder, "scala_udf")
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("vector_cosine", cosineBuilder, "scala_udf")
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("word_shingles", shinglesBuilder, "scala_udf")
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("simhash64", simhashBuilder, "scala_udf")
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("repetition_stats", repetitionBuilder,
-        "scala_udf")
-  }
+  def register(spark: SparkSession): Unit =
+    sqlFunctions.foreach { case (name, _, build) =>
+      spark.sessionState.functionRegistry
+        .createOrReplaceTempFunction(name, build, "scala_udf")
+    }
 }
 
 /** SparkSessionExtensions hook: add
@@ -171,22 +143,9 @@ object GraftFunctions {
   * at session build to get graft's SQL functions in every new session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(
-      (GraftFunctions.ident, GraftFunctions.info, GraftFunctions.builder))
-    ext.injectFunction(
-      (GraftFunctions.dotIdent, GraftFunctions.dotInfo, GraftFunctions.dotBuilder))
-    ext.injectFunction(
-      (GraftFunctions.cosineIdent, GraftFunctions.cosineInfo,
-        GraftFunctions.cosineBuilder))
-    ext.injectFunction(
-      (GraftFunctions.shinglesIdent, GraftFunctions.shinglesInfo,
-        GraftFunctions.shinglesBuilder))
-    ext.injectFunction(
-      (GraftFunctions.simhashIdent, GraftFunctions.simhashInfo,
-        GraftFunctions.simhashBuilder))
-    ext.injectFunction(
-      (GraftFunctions.repetitionIdent, GraftFunctions.repetitionInfo,
-        GraftFunctions.repetitionBuilder))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.sqlFunctions.foreach { case (name, cls, build) =>
+      ext.injectFunction(
+        (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+    }
 }

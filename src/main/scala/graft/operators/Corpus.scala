@@ -37,7 +37,7 @@ object Corpus {
     * document's fold survives re-ingestion, repartition, and cluster
     * layout, and two pipelines computing folds independently agree.
     */
-  def cvFoldExpr(k: Int): org.apache.spark.sql.Column =
+  private def cvFoldExpr(k: Int): org.apache.spark.sql.Column =
     pmod(conv(substring(md5(col("text")), 1, 8), 16, 10).cast("long"),
       lit(k.toLong))
 

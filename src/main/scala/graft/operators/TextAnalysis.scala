@@ -350,10 +350,7 @@ object TextAnalysis {
 
   /** Head/middle/tail buckets over an already-scored frame (the
     * [[lmScore]] output schema). The scores feed BOTH the cuts
-    * aggregate and the final bucketing, so at scale the caller
-    * persists the scored frame once — `lmScore(...).persist()` —
-    * before calling this; re-deriving it would re-run the gram
-    * explode + LM join twice. Tercile cuts come from a deterministic
+    * aggregate and the final bucketing. Tercile cuts come from a deterministic
     * fixed-size bottom-k avalanche-hash sample of doc scores
     * (fixed-fraction aggregate state — the [[Sessionize.winsorize]]
     * shape, NOT an exact percentile over every doc), broadcast back
@@ -361,8 +358,8 @@ object TextAnalysis {
     * to min/max cuts (the tail bucket empties), never NULL buckets.
     * Docs with no grams bucket as `unscored`.
     */
-  def bucketsFromScores(scored: DataFrame,
-                        k: Int = Sketches.QsK): DataFrame = {
+  private def bucketsFromScores(scored: DataFrame,
+                                k: Int = Sketches.QsK): DataFrame = {
     // tercile cuts from the FIXED-SIZE bottom-k sample (the
     // Sketches.quantileSketch order, global grain → TakeOrdered, no
     // window): state k rows however large the corpus — replaced the
@@ -386,8 +383,7 @@ object TextAnalysis {
   /** [[lmScore]] + [[bucketsFromScores]] in one call — the CCNet
     * partition that keeps `head` for training, samples `middle`,
     * drops `tail`. Convenience form: the unpersisted scored lineage
-    * executes once per consumer (cuts + bucketing); scale callers
-    * persist the scores and use [[bucketsFromScores]] directly.
+    * executes once per consumer (cuts + bucketing).
     */
   def perplexityBuckets(docs: DataFrame, lm: DataFrame, n: Int = 3,
                         k: Int = Sketches.QsK): DataFrame =

@@ -1,7 +1,9 @@
 package graft.streaming
 
+import graft.core.Pin
 import graft.operators.{Corpus, Redact}
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, Row, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, count, count_if, lit, sum}
 import org.apache.spark.sql.types.StructType
 
 /** The COMPOSED ingest-time curation pipeline — every stage a
@@ -43,6 +45,14 @@ import org.apache.spark.sql.types.StructType
   * batch and asserts identical sink + index state). NULL-identity rows
   * ride every stage's uniform pass-through contract.
   *
+  * One stage chain serves [[accept]] and [[sinkTo]]. Its gated frame
+  * is pinned on every path, so scrub and the gate run once per row
+  * however many branches the exact stage reads it through. The funnel
+  * row ([[CurationStats]]) costs no recompute: `n_in` and `n_gated`
+  * are observations on that pin's execution, and the remaining counts
+  * are one aggregate over the frames the index stages pin anyway,
+  * run only when `sinkTo` has a stats dir to write.
+  *
   * Maintenance composes too: [[compact]]/[[expireBatchesBelow]] fan out
   * to all three indexes under the one commit-log proof, so an offline
   * fold can never leave one index's replay contract behind.
@@ -74,76 +84,69 @@ class CurationPipeline(val spark: SparkSession, dir: String,
   val search: Option[KeywordIndex] =
     if (indexForSearch) Some(new KeywordIndex(spark, s"$dir/search")) else None
 
-  /** The stage chain shared by both accept forms — one body, so the
-    * plain and the counted paths cannot drift. `checkpointGate`
-    * materializes the gated frame only when the caller will count it
-    * (the other stages checkpoint internally regardless).
-    */
-  private def stages(batch: DataFrame, batchId: Long, checkpointGate: Boolean)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val gated0 = gate(Redact.scrub(batch))
-    // optional benchmark-leak stage: only meaningful when the batch
-    // carries an embedding column; placed before the dedup indexes so
-    // a contaminated doc can never inoculate the corpus
-    val deconed = benchEmbeddings match {
-      case Some(b) if batch.columns.contains("embedding") =>
-        Corpus.decontaminateSemanticKeep(gated0, b, minBenchCosine)
-      case _ => gated0
-    }
-    val gated = if (checkpointGate) graft.core.Pin.pin(deconed) else deconed
-    val unique = exact.accept(gated, batchId)
-    val novel = near.accept(unique, batchId)
-    val out = spans.scrub(novel, batchId)
-    search.foreach(_.accept(
-      out.withColumn("text", org.apache.spark.sql.functions.col("clean_text")),
-      batchId))
-    (gated, unique, novel, out)
-  }
-
   /** Run one micro-batch through every stage; returns the curated rows
     * (non-text columns preserved, `clean_text`/`n_removed` from the
-    * span excision) and grows all three indexes. No funnel counting —
-    * the default production path pays zero extra jobs.
+    * span excision) and grows all three indexes.
     */
   def accept(batch: DataFrame, batchId: Long): DataFrame =
-    stages(batch, batchId, checkpointGate = false)._4
-
-  /** [[accept]] plus the per-stage funnel — the observability a
-    * production intake needs per batch (where did the batch shrink:
-    * gate, exact, near, span?). Each count runs on a frame the stage
-    * chain materialized (pinned), so the funnel costs cached
-    * counts plus one input count, never a recompute of a stage.
-    */
-  def acceptWithStats(batch: DataFrame, batchId: Long): (DataFrame, CurationStats) = {
-    val nIn = batch.count()
-    val (gated, unique, novel, out) = stages(batch, batchId, checkpointGate = true)
-    val outAgg = out.agg(
-      org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)),
-      org.apache.spark.sql.functions.sum("n_removed")).head()
-    (out, CurationStats(batchId, nIn, gated.count(), unique.count(),
-      novel.count(), outAgg.getLong(0),
-      Option(outAgg.get(1)).map(_.asInstanceOf[Long]).getOrElse(0L)))
-  }
+    stages(batch, batchId)._1
 
   /** [[accept]] + idempotent parquet sink, in the `(batch, id)` shape
     * `foreachBatch` and [[StreamSink.ingestAvailableNowBatches]] call.
     * With `statsDir` set, the batch's funnel row lands next to the
     * data under the same per-batch-id overwrite discipline (a replay
-    * rewrites its own stats row, never duplicates it).
+    * rewrites its own stats row, never duplicates it); without it no
+    * funnel job runs.
     */
   def sinkTo(outDir: String, statsDir: Option[String] = None): (Dataset[Row], Long) => Unit =
     (batch, batchId) => {
-      val (out, stats) = acceptWithStats(batch.toDF(), batchId)
+      val (out, stats) = stages(batch.toDF(), batchId)
       StreamSink.idempotentParquet(outDir)(out, batchId)
       statsDir.foreach { sd =>
         import spark.implicits._
         StreamSink.idempotentParquet(sd)(
-          Seq(stats).toDF().toDF("batch_id", "n_in", "n_gated",
+          Seq(stats()).toDF().toDF("batch_id", "n_in", "n_gated",
             "n_after_exact", "n_after_near", "n_out", "n_tokens_removed"),
           batchId)
       }
     }
+
+  /** The one stage chain. The gated frame is always pinned: the exact
+    * stage reads it through several branches, and each would otherwise
+    * re-run scrub and the gate. `n_in` and `n_gated` are observed on
+    * that pin's own execution; the other stage outputs are frames the
+    * index stages pin, counted only when the returned funnel is called.
+    */
+  private def stages(batch: DataFrame, batchId: Long)
+      : (DataFrame, () => CurationStats) = {
+    val (nIn, nGated) = (Observation(), Observation())
+    val scrubbed = gate(Redact.scrub(batch.observe(nIn, count(lit(1)))))
+    // optional benchmark-leak stage: only meaningful when the batch
+    // carries an embedding column; placed before the dedup indexes so
+    // a contaminated doc can never inoculate the corpus. It reads its
+    // input three times, so that input gets a pin of its own.
+    val deconed = benchEmbeddings match {
+      case Some(b) if batch.columns.contains("embedding") =>
+        Corpus.decontaminateSemanticKeep(Pin.pin(scrubbed), b, minBenchCosine)
+      case _ => scrubbed
+    }
+    val gated = Pin.pin(deconed.observe(nGated, count(lit(1))))
+    val unique = exact.accept(gated, batchId)
+    val novel = near.accept(unique, batchId)
+    val out = spans.scrub(novel, batchId)
+    search.foreach(_.accept(out.withColumn("text", col("clean_text")), batchId))
+    (out, () => {
+      val tail = unique.select(lit(0).as("stage"), lit(0L).as("n_removed"))
+        .unionByName(novel.select(lit(1).as("stage"), lit(0L).as("n_removed")))
+        .unionByName(out.select(lit(2).as("stage"), col("n_removed")))
+        .agg(count_if(col("stage") === 0), count_if(col("stage") === 1),
+          count_if(col("stage") === 2), coalesce(sum("n_removed"), lit(0L)))
+        .head()
+      def observed(o: Observation) = o.get.values.head.asInstanceOf[Long]
+      CurationStats(batchId, observed(nIn), observed(nGated), tail.getLong(0),
+        tail.getLong(1), tail.getLong(2), tail.getLong(3))
+    })
+  }
 
   /** One checkpointed AvailableNow run over a landing directory: every
     * parquet file not yet processed flows through the full pipeline
@@ -172,7 +175,7 @@ class CurationPipeline(val spark: SparkSession, dir: String,
       _.expireBatchesBelow(cutoff, lastCommittedBatchId))
 }
 
-/** One batch's stage-by-stage funnel ([[CurationPipeline.acceptWithStats]]). */
+/** One batch's stage-by-stage funnel, the stats row [[CurationPipeline.sinkTo]] writes. */
 final case class CurationStats(batchId: Long, nIn: Long, nGated: Long,
                                nAfterExact: Long, nAfterNear: Long,
                                nOut: Long, nTokensRemoved: Long)

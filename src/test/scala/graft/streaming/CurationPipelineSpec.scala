@@ -35,6 +35,23 @@ class CurationPipelineSpec extends SparkSpec {
   private def drop(landing: String, rows: (Long, String)*): Unit =
     rows.toSeq.toDF("doc_id", "text").write.mode("append").parquet(landing)
 
+  /** `rows` as a file-backed frame, the shape a streaming micro-batch
+    * has (an in-memory frame's filters are folded by the optimizer).
+    */
+  private def fileBatch(root: String, rows: (Long, String)*): DataFrame = {
+    drop(s"$root/batch", rows: _*)
+    spark.read.parquet(s"$root/batch")
+  }
+
+  /** [[mkPipeline]]'s gate behind a UDF that counts its calls. */
+  private def countingGate(calls: org.apache.spark.util.LongAccumulator)
+      : DataFrame => DataFrame = {
+    val counted = org.apache.spark.sql.functions.udf { (t: String) =>
+      calls.add(1); t != null
+    }
+    df => Corpus.gopherGateKeep(df.filter(counted($"text")), minTokens = 5)
+  }
+
   test("file drops flow scrub → gate → exact → near → span → sink; " +
        "cross-drop duplicates drop; quoted passages are excised") {
     val root = java.nio.file.Files.createTempDirectory("graft_cur").toString
@@ -140,16 +157,25 @@ class CurationPipelineSpec extends SparkSpec {
     val nearBench = benchVec.map(v => v + 0.001f) // cosine ≈ 1
     val farVec = vec(2)
     val bench = Seq((100L, benchVec)).toDF("vec_id", "embedding")
+    val calls = spark.sparkContext.longAccumulator("gate_calls")
     val pipe = new CurationPipeline(spark, s"$root/indexes",
-      gate = Corpus.gopherGateKeep(_, minTokens = 5),
+      gate = countingGate(calls),
       benchEmbeddings = Some(bench), minBenchCosine = 0.9)
     val batch = Seq(
       (1L, docA, Some(nearBench.toSeq)),  // paraphrased leak → drop
       (2L, docB, Some(farVec.toSeq)),     // semantically far → keep
       (3L, docG, None))                   // no embedding → pass through
       .toDF("doc_id", "text", "embedding")
-    val kept = pipe.accept(batch, 0L).select("doc_id").as[Long].collect().toSet
+    pipe.sinkTo(s"$root/out", Some(s"$root/stats"))(batch, 0L)
+    val kept = spark.read.parquet(s"$root/out/batch=0")
+      .select("doc_id").as[Long].collect().toSet
     assert(kept == Set(2L, 3L), s"benchmark stage kept $kept, want {2,3}")
+    // the stage reads the gated frame three times; each row is gated
+    // and counted once
+    assert(calls.value == 3L, s"gate ran ${calls.value} times for 3 rows")
+    val st = spark.read.parquet(s"$root/stats/batch=0").head()
+    assert((1 to 6).map(st.getLong) == Seq(3L, 2L, 2L, 2L, 2L, 0L),
+      s"benchmark-stage funnel wrong: $st")
     // the contaminated doc never grew an index (it can't inoculate
     // the corpus against an honest later duplicate)
     assert(pipe.exact.hashes.count() == 2 &&
@@ -165,5 +191,53 @@ class CurationPipelineSpec extends SparkSpec {
     val kept = pipe.accept(batch, 0L)
     assert(kept.count() == 2, "NULL-id row was dropped by a keyed stage")
     assert(kept.filter($"doc_id".isNull).count() == 1)
+  }
+
+  test("on the plain accept path the gate runs once per batch row") {
+    val root = java.nio.file.Files.createTempDirectory("graft_cur_once").toString
+    val calls = spark.sparkContext.longAccumulator("gate_calls")
+    val pipe = new CurationPipeline(spark, s"$root/indexes", gate = countingGate(calls))
+    val batch = fileBatch(root, 1L -> docA, 2L -> docB, 3L -> docG)
+    assert(pipe.accept(batch, 0L).count() == 3)
+    // unpinned, every read of the gated frame by the exact stage re-runs
+    // the gate: 12 calls for these 3 rows
+    assert(calls.value == 3L, s"gate ran ${calls.value} times for 3 rows")
+  }
+
+  test("a batch the gate rejects entirely still writes its funnel row") {
+    val root = java.nio.file.Files.createTempDirectory("graft_cur_empty").toString
+    val (landing, out, stats) = (s"$root/landing", s"$root/out", s"$root/stats")
+    drop(landing, 1L -> docCShort)
+    mkPipeline(root).ingest(landing, StructType.fromDDL("doc_id LONG, text STRING"),
+      s"$root/ckpt", out, statsDir = Some(stats))
+    assert(spark.read.parquet(s"$out/batch=0").count() == 0)
+    val st = spark.read.parquet(s"$stats/batch=0").head()
+    assert((1 to 6).map(st.getLong) == Seq(1L, 0L, 0L, 0L, 0L, 0L),
+      s"empty-gate funnel wrong: $st")
+  }
+
+  test("without a stats dir, sinkTo starts no job beyond accept and the " +
+       "sink write") {
+    val root = java.nio.file.Files.createTempDirectory("graft_cur_jobs").toString
+    val batch = fileBatch(root, 1L -> docA, 2L -> docB, 3L -> docCShort,
+      4L -> docA)
+    val (viaSink, viaAccept) = (mkPipeline(s"$root/a"), mkPipeline(s"$root/b"))
+    def jobs(body: => Unit): Int = {
+      val n = new java.util.concurrent.atomic.AtomicInteger
+      val counter = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          n.incrementAndGet()
+      }
+      graft.core.GraftSession.drainListeners(spark)
+      spark.sparkContext.addSparkListener(counter)
+      try { body; graft.core.GraftSession.drainListeners(spark) }
+      finally spark.sparkContext.removeSparkListener(counter)
+      n.get
+    }
+    val sinkJobs = jobs(viaSink.sinkTo(s"$root/out_a")(batch, 0L))
+    val acceptJobs = jobs(StreamSink.idempotentParquet(s"$root/out_b")(
+      viaAccept.accept(batch, 0L), 0L))
+    assert(sinkJobs == acceptJobs,
+      s"sinkTo without stats ran $sinkJobs jobs, accept + sink $acceptJobs")
   }
 }
