@@ -94,6 +94,14 @@ object Corpus {
     * An LM-perplexity rule (the CCNet signal) composes on top via
     * [[gateWithLm]] — kept out of the base gate because the reference
     * LM is a second input, not a property of the gated corpus.
+    *
+    * UNSORTED (doctrine: hash-stability sorts live in the verify
+    * wrapper, QuerySpec.sortKeys) and stateless — a per-row projection
+    * + filter, so it drops straight into a `readStream` (ingest-time
+    * quality gating, the [[graft.operators.Redact.scrubExpr]]
+    * deployment shape — gate the crawl as it lands instead of
+    * re-scanning the corpus later); StreamScrubSpec drives it through
+    * a streaming query.
     */
   def gopherGate(docs: DataFrame, lang: String = "en",
                  minTokens: Long = 15, maxTokens: Long = 100000,
@@ -101,26 +109,6 @@ object Corpus {
                  maxPunctRatio: Double = 0.2, minScore: Double = 0.5,
                  maxRepetitionRatio: Double = 0.05,
                  maxTopNgramRatio: Double = 0.10): DataFrame =
-    // UNSORTED (doctrine: hash-stability sorts live in the verify
-    // wrapper, QuerySpec.sortKeys) — identical to
-    // gopherGateRows, which remains the streaming-named entry point
-    gopherGateRows(docs, lang, minTokens, maxTokens, minAvgTokenLen,
-      maxAvgTokenLen, maxPunctRatio, minScore, maxRepetitionRatio,
-      maxTopNgramRatio)
-
-  /** [[gopherGate]] under its streaming-deployment name — a stateless
-    * per-row projection + filter, so this form drops
-    * straight into a `readStream` (ingest-time quality gating, the
-    * [[graft.operators.Redact.scrubExpr]] deployment shape — gate the
-    * crawl as it lands instead of re-scanning the corpus later);
-    * StreamScrubSpec drives it through a streaming query.
-    */
-  def gopherGateRows(docs: DataFrame, lang: String = "en",
-                     minTokens: Long = 15, maxTokens: Long = 100000,
-                     minAvgTokenLen: Double = 3.0, maxAvgTokenLen: Double = 10.0,
-                     maxPunctRatio: Double = 0.2, minScore: Double = 0.5,
-                     maxRepetitionRatio: Double = 0.05,
-                     maxTopNgramRatio: Double = 0.10): DataFrame =
     TextAnalysis.gateSignals(docs)
       .filter(gateCond(col, lang, minTokens, maxTokens, minAvgTokenLen,
         maxAvgTokenLen, maxPunctRatio, minScore, maxRepetitionRatio,
@@ -188,7 +176,7 @@ object Corpus {
     // expensive half, so it must only ever see gate SURVIVORS — scoring
     // the full corpus and inner-joining after would pay the explode
     // for every rejected doc too
-    val gated = gopherGateRows(docs, lang, minTokens, maxTokens,
+    val gated = gopherGate(docs, lang, minTokens, maxTokens,
       minAvgTokenLen, maxAvgTokenLen, maxPunctRatio, minScore,
       maxRepetitionRatio, maxTopNgramRatio)
     val survivors = docs.join(gated.select("doc_id"), Seq("doc_id"), "left_semi")

@@ -35,6 +35,29 @@ object TextAnalysis {
   private def markerCountsAll(text: Column): Column =
     GraftFunctions.markerCounts(text, Markers.map(_._2))
 
+  /** The bounded composite quality score — the one formula
+    * [[qualityScoreExpr]], [[withGateSignals]] and [[quality]] share.
+    */
+  private def compositeScore(nTokens: Column, punctRatio: Column,
+                             stopRatio: Column): Column =
+    least(nTokens.cast("double") / 100.0, lit(1.0)) * 0.4 +
+      (lit(1.0) - punctRatio) * 0.3 +
+      least(stopRatio * 5.0, lit(1.0)) * 0.3
+
+  /** Argmax over per-language marker counts (in [[Markers]] order)
+    * with a fixed priority on ties (en > es > fr > de); no marker at
+    * all → "und" — the one rule [[predictedLangExpr]],
+    * [[withGateSignals]] and [[langId]] share.
+    */
+  private def langArgmax(scores: Seq[Column]): Column = {
+    val Seq(en, es, fr, de) = scores
+    when(en >= es && en >= fr && en >= de && en > 0, "en")
+      .when(es >= fr && es >= de && es > 0, "es")
+      .when(fr >= de && fr > 0, "fr")
+      .when(de > 0, "de")
+      .otherwise("und")
+  }
+
   // -- reusable per-row expression builders (shared by the standalone
   //    queries and by pipeline compositions like Corpus.qualityFilter,
   //    so composed pipelines stay ONE scan instead of joining three) --
@@ -51,20 +74,13 @@ object TextAnalysis {
     val punctRatio = length(regexp_replace(text, "[a-z ]", "")).cast("double") / nChars
     val stopRatio = element_at(markerCountsAll(seg), 1)
       .cast("double") / nTokens
-    least(nTokens.cast("double") / 100.0, lit(1.0)) * 0.4 +
-      (lit(1.0) - punctRatio) * 0.3 +
-      least(stopRatio * 5.0, lit(1.0)) * 0.3
+    compositeScore(nTokens, punctRatio, stopRatio)
   }
 
   /** Argmax language pick with fixed priority — same rule as [[langId]]. */
   def predictedLangExpr(text: Column): Column = {
     val mc = markerCountsAll(TextOps.segmentIfUnspaced(text))
-    val Seq(en, es, fr, de) = Markers.indices.map(i => element_at(mc, i + 1))
-    when(en >= es && en >= fr && en >= de && en > 0, "en")
-      .when(es >= fr && es >= de && es > 0, "es")
-      .when(fr >= de && fr > 0, "fr")
-      .when(de > 0, "de")
-      .otherwise("und")
+    langArgmax(Markers.indices.map(i => element_at(mc, i + 1)))
   }
 
   /** Every per-row gate signal in ONE projection over the scan — the
@@ -123,19 +139,9 @@ object TextAnalysis {
       .withColumn("__gs_punct_ratio", punctRatio)
       .withColumn("__gs_stopword_ratio", stopRatio)
       .withColumn("__gs_quality_score",
-        least(col("__gs_n_tokens").cast("double") / 100.0, lit(1.0)) * 0.4 +
-          (lit(1.0) - punctRatio) * 0.3 +
-          least(stopRatio * 5.0, lit(1.0)) * 0.3)
+        compositeScore(col("__gs_n_tokens"), punctRatio, stopRatio))
       .withColumn("__gs_predicted_lang",
-        when(col("__score_en") >= col("__score_es") &&
-          col("__score_en") >= col("__score_fr") &&
-          col("__score_en") >= col("__score_de") && col("__score_en") > 0, "en")
-          .when(col("__score_es") >= col("__score_fr") &&
-            col("__score_es") >= col("__score_de") && col("__score_es") > 0, "es")
-          .when(col("__score_fr") >= col("__score_de") &&
-            col("__score_fr") > 0, "fr")
-          .when(col("__score_de") > 0, "de")
-          .otherwise("und"))
+        langArgmax(Markers.map { case (l, _) => col(s"__score_$l") }))
       .withColumn("__gs_repetition_ratio",
         when(col("__st.total_ngrams") === 0, 0.0)
           .otherwise(round(lit(1.0) - col("__st.distinct_ngrams").cast("double") /
@@ -161,13 +167,8 @@ object TextAnalysis {
       .select(
         (col("doc_id") +: Markers.zipWithIndex.map { case ((l, _), i) =>
           element_at(col("mc"), i + 1).as(s"score_$l") }): _*)
-    val Seq(en, es, fr, de) = Markers.map { case (l, _) => col(s"score_$l") }
     scored.withColumn("predicted_lang",
-      when(en >= es && en >= fr && en >= de && en > 0, "en")
-        .when(es >= fr && es >= de && es > 0, "es")
-        .when(fr >= de && fr > 0, "fr")
-        .when(de > 0, "de")
-        .otherwise("und"))
+      langArgmax(Markers.map { case (l, _) => col(s"score_$l") }))
   }
 
   /** Quality scoring: token count, average token length, punctuation
@@ -191,10 +192,8 @@ object TextAnalysis {
         (stopHits.cast("double") / nTokens).as("stopword_ratio"),
         ((length(seg) - nTokens + 1).cast("double") / nTokens)
           .as("avg_token_len"))
-      .withColumn("quality_score",
-        least(col("n_tokens").cast("double") / 100.0, lit(1.0)) * 0.4
-          + (lit(1.0) - col("punct_ratio")) * 0.3
-          + least(col("stopword_ratio") * 5.0, lit(1.0)) * 0.3)
+      .withColumn("quality_score", compositeScore(col("n_tokens"),
+        col("punct_ratio"), col("stopword_ratio")))
   }
 
   /** Token counting three ways: whitespace tokens, BPE-ish regex tokens

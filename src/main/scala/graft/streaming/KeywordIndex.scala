@@ -38,45 +38,38 @@ import org.apache.spark.sql.functions._
   */
 class KeywordIndex(protected val spark: SparkSession, dir: String)
     extends IndexMaintenance {
-  private val postingsDir = s"$dir/postings"
-  private val positionsDir = s"$dir/positions"
-  private val docsDir = s"$dir/indexed_docs"
-  protected def frameDirs: Seq[String] =
-    Seq(postingsDir, positionsDir, docsDir)
-
-  locally {
-    StreamDedup.bootstrapFrame(spark, postingsDir,
-      Retrieval.postingsTable(StreamDedup.emptyDocs(spark))
-        .withColumn("src_batch", lit(0L)))
-    StreamDedup.bootstrapFrame(spark, positionsDir,
-      Retrieval.positionalPostings(StreamDedup.emptyDocs(spark))
-        .withColumn("src_batch", lit(0L)))
-    StreamDedup.bootstrapFrame(spark, docsDir,
-      StreamDedup.emptyDocs(spark)
-        .select(col("doc_id"), lit(0L).as("src_batch")))
-  }
+  private val postingsFrame = new BatchFrame(spark, s"$dir/postings",
+    Retrieval.postingsTable(StreamDedup.emptyDocs(spark))
+      .withColumn("src_batch", lit(0L)))
+  private val positionsFrame = new BatchFrame(spark, s"$dir/positions",
+    Retrieval.positionalPostings(StreamDedup.emptyDocs(spark))
+      .withColumn("src_batch", lit(0L)))
+  private val docsFrame = new BatchFrame(spark, s"$dir/indexed_docs",
+    StreamDedup.emptyDocs(spark)
+      .select(col("doc_id"), lit(0L).as("src_batch")))
+  private[streaming] def frames = Seq(postingsFrame, positionsFrame, docsFrame)
 
   /** Each doc's winning (latest) src_batch — doc-grain, far smaller
     * than the postings it arbitrates; re-seen docs are the only rows
     * where it differs from any posting's own src_batch.
     */
   private def latestPerDoc: DataFrame =
-    spark.read.parquet(docsDir)
+    docsFrame.read
       .groupBy("doc_id").agg(max("src_batch").as("__winner"))
 
   /** The index's live postings: one version per doc (last writer
     * wins). The arbitration join is doc-grain against postings-grain
     * — when no doc was ever re-seen it filters nothing out.
     */
-  def postings: DataFrame = liveFrame(postingsDir)
+  def postings: DataFrame = liveFrame(postingsFrame)
 
   /** The index's live POSITIONAL postings (doc_id, term, pos) — the
     * phrase-query frame, same last-writer-wins arbitration.
     */
-  def positional: DataFrame = liveFrame(positionsDir)
+  def positional: DataFrame = liveFrame(positionsFrame)
 
-  private def liveFrame(dirPath: String): DataFrame =
-    spark.read.parquet(dirPath)
+  private def liveFrame(frame: BatchFrame): DataFrame =
+    frame.read
       .join(latestPerDoc, Seq("doc_id"), "inner")
       .filter(col("src_batch") === col("__winner"))
       .drop("src_batch", "__winner")
@@ -85,7 +78,7 @@ class KeywordIndex(protected val spark: SparkSession, dir: String)
     * counted ONCE.
     */
   def nDocs: Long =
-    spark.read.parquet(docsDir).select("doc_id").distinct().count()
+    docsFrame.read.select("doc_id").distinct().count()
 
   /** Index one micro-batch: tokenize ONCE, land postings + the
     * batch's doc ids in its own partitions (idempotent under replay),
@@ -105,15 +98,12 @@ class KeywordIndex(protected val spark: SparkSession, dir: String)
       .filter(col("doc_id").isNotNull && col("text").isNotNull)
       .dropDuplicates("doc_id")
       .transform(graft.core.Pin.pin(_))
-    Retrieval.postingsTable(real)
-      .withColumn("src_batch", lit(batchId))
-      .write.mode("overwrite").parquet(s"$postingsDir/batch=$batchId")
-    Retrieval.positionalPostings(real)
-      .withColumn("src_batch", lit(batchId))
-      .write.mode("overwrite").parquet(s"$positionsDir/batch=$batchId")
-    real.select(col("doc_id")).distinct()
-      .withColumn("src_batch", lit(batchId))
-      .write.mode("overwrite").parquet(s"$docsDir/batch=$batchId")
+    Seq(postingsFrame -> Retrieval.postingsTable(real),
+      positionsFrame -> Retrieval.positionalPostings(real),
+      docsFrame -> real.select(col("doc_id")).distinct())
+      .foreach { case (f, rows) =>
+        f.write(rows.withColumn("src_batch", lit(batchId)), batchId)
+      }
     batch
   }
 

@@ -32,20 +32,16 @@ class QuantileIndex(protected val spark: SparkSession, dir: String,
                     template: DataFrame, group: Seq[String],
                     value: Column, rowId: Column,
                     k: Int = Sketches.QsK) extends IndexMaintenance {
-  private val sketchDir = s"$dir/sketch"
-  protected def frameDirs: Seq[String] = Seq(sketchDir)
-
-  locally {
-    StreamDedup.bootstrapFrame(spark, sketchDir,
-      Sketches.quantileSketch(template.limit(0), group, value, rowId, k))
-  }
+  private val sketchFrame = new BatchFrame(spark, s"$dir/sketch",
+    Sketches.quantileSketch(template.limit(0), group, value, rowId, k))
+  private[streaming] def frames = Seq(sketchFrame)
 
   /** Land one micro-batch's bottom-k sketch (idempotent under
     * replay — own-partition overwrite).
     */
   def accept(batch: DataFrame, batchId: Long): Unit =
-    Sketches.quantileSketch(batch, group, value, rowId, k)
-      .write.mode("overwrite").parquet(s"$sketchDir/batch=$batchId")
+    sketchFrame.write(
+      Sketches.quantileSketch(batch, group, value, rowId, k), batchId)
 
   /** The standing sketch: bottom-k of every batch's bottom-k (the
     * `batch` partition-discovery column is dropped — it is layout,
@@ -53,7 +49,7 @@ class QuantileIndex(protected val spark: SparkSession, dir: String,
     */
   def sketch: DataFrame =
     Sketches.quantileMerge(group, k,
-      spark.read.parquet(sketchDir).drop("batch"))
+      sketchFrame.read.drop("batch"))
 
   /** Quantile estimates over the standing sketch
     * ([[Sketches.quantileEstimate]]).

@@ -38,25 +38,20 @@ class RollupState(protected val spark: SparkSession, dir: String,
                   template: DataFrame, groupCols: Seq[String],
                   sumCols: Seq[String]) extends IndexMaintenance {
   require(groupCols.nonEmpty && sumCols.nonEmpty, "empty rollup spec")
-  private val deltasDir = s"$dir/deltas"
-  protected def frameDirs: Seq[String] = Seq(deltasDir)
-
-  locally {
-    StreamDedup.bootstrapFrame(spark, deltasDir,
-      template.limit(0).withColumn("src_batch", lit(0L)))
-  }
+  private val deltasFrame = new BatchFrame(spark, s"$dir/deltas",
+    template.limit(0).withColumn("src_batch", lit(0L)))
+  private[streaming] def frames = Seq(deltasFrame)
 
   /** Land one micro-batch's pre-aggregated delta (idempotent under
     * replay — own-partition overwrite).
     */
   def accept(delta: DataFrame, batchId: Long): Unit =
-    delta.select(groupCols.map(col) ++ sumCols.map(col): _*)
-      .withColumn("src_batch", lit(batchId))
-      .write.mode("overwrite").parquet(s"$deltasDir/batch=$batchId")
+    deltasFrame.write(delta.select(groupCols.map(col) ++ sumCols.map(col): _*)
+      .withColumn("src_batch", lit(batchId)), batchId)
 
   /** The standing rollup: sum of every delta, group-grain. */
   def current: DataFrame =
-    spark.read.parquet(deltasDir)
+    deltasFrame.read
       .groupBy(groupCols.map(col): _*)
       .agg(sum(sumCols.head).as(sumCols.head),
         sumCols.tail.map(c => sum(c).as(c)): _*)

@@ -61,8 +61,8 @@ object StreamDedup {
     * probed through stored (doc_id, band, bucket) postings and
     * (doc_id, sh) shingle frames ([[graft.operators.Dedup.minhashProbe]]),
     * so the plan never reads a corpus text column — the only text
-    * scanned is the batch's own. This is the per-micro-batch kernel
-    * that [[NearDupIndex.accept]] wraps with index maintenance.
+    * scanned is the batch's own. [[NearDupIndex.accept]] runs this
+    * same semi-join per micro-batch, with index maintenance around it.
     */
   def scrubNearDupsIndexed(batch: DataFrame, corpusPostings: DataFrame,
                            corpusShingles: DataFrame, n: Int = 3,
@@ -102,18 +102,11 @@ object StreamDedup {
           org.apache.spark.sql.types.ArrayType(
             org.apache.spark.sql.types.FloatType)))))
 
-  /** The partition value index seeds ([[NearDupIndex.append]] /
-    * [[SpanIndex.append]]) write under — below any real foreachBatch
-    * batch id, so seed rows are never excluded by a probe's
-    * own-batch filter.
+  /** The partition value index seeds ([[BatchFrame.seed]]) write
+    * under — below any real foreachBatch batch id, so seed rows are
+    * never excluded by a probe's own-batch filter.
     */
   final val SeedBatchId = -1L
-
-  /** The shared own-batch replay-exclusion filter — one definition so
-    * the two indexes cannot silently diverge in replay behavior.
-    */
-  private[streaming] def exceptBatch(df: DataFrame, batchId: Long): DataFrame =
-    df.filter(col("batch") =!= lit(batchId))
 
   /** Bind an index's LAYOUT geometry to its on-disk state: first
     * construction writes `<dir>/_geometry` (underscore-prefixed, so
@@ -198,27 +191,10 @@ object StreamDedup {
     }.reduce(_.unionByName(_))
   }
 
-  /** Bootstrap one index frame if (and only if) it is missing — each
-    * frame independently, so a crash between two frames' bootstraps
-    * leaves the done one alone and the re-run fills only the gap;
-    * overwriting BOTH on "either missing" would wipe the seed rows of
-    * a frame that still holds real data.
-    */
-  private[streaming] def bootstrapFrame(spark: SparkSession, dirPath: String,
-                                        empty: => DataFrame): Unit =
-    if (!pathExists(spark, dirPath))
-      empty.write.mode("overwrite").parquet(s"$dirPath/batch=$SeedBatchId")
-
-  /** Dot-prefixed so in-progress compaction output is HIDDEN from
-    * every reader of the frame root (Spark's listing skips `.`/`_`
-    * children) while still directly readable as an explicit path.
-    */
-  private val CompactStagePrefix = ".compacting-"
-
   /** Highest batch id the streaming checkpoint's commit log records
     * (`<checkpoint>/commits/<batchId>`) — the durable proof
-    * [[compactFrame]]'s precondition demands. None before any batch
-    * has committed.
+    * [[BatchFrame.compact]]'s precondition demands. None before any
+    * batch has committed.
     */
   def lastCommittedBatch(spark: SparkSession, checkpointDir: String): Option[Long] = {
     val p = new org.apache.hadoop.fs.Path(s"$checkpointDir/commits")
@@ -228,182 +204,6 @@ object StreamDedup {
       s.getPath.getName.stripSuffix(".compact").toLong).toOption)
       .maxOption
   }
-
-  /** Horizon-bounded index retention shared by the
-    * `expireBatchesBelow` methods: delete every `batch=<id>` partition
-    * with `SeedBatchId < id < cutoff` — dedup-protection for documents
-    * ingested before the horizon lapses, bounding index size the way
-    * `dropDuplicatesWithinWatermark` bounds streaming state (a
-    * re-crawl window, not an eternal memory). The seed partition
-    * (curated backfill) is deliberately retained; fold batches into it
-    * via compact() first when they should become permanent.
-    *
-    * ENFORCED precondition: `cutoff ≤ lastCommittedBatchId + 1`. An
-    * expired batch must never replay — a replayed batch id whose
-    * partition was deleted would re-accept every row it carried — and
-    * commitment is exactly the property that rules replay out.
-    */
-  private[streaming] def expireFrameBatchesBelow(spark: SparkSession,
-                                                 dirPath: String, cutoff: Long,
-                                                 lastCommittedBatchId: Long): Unit = {
-    if (cutoff > lastCommittedBatchId + 1)
-      throw new IllegalStateException(
-        s"expire cutoff $cutoff exceeds committed high-water mark " +
-          s"$lastCommittedBatchId + 1 for $dirPath: an uncommitted batch " +
-          "below the cutoff could replay after its partition is deleted " +
-          "and silently re-accept its rows")
-    val root = new org.apache.hadoop.fs.Path(dirPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a leftover compaction stage holds a fold of the CURRENT batches;
-    // expiring under it would be undone the moment the interrupted
-    // compact re-runs and folds the stage — with the expired rows —
-    // into the seed partition retention never touches. Resolve the
-    // crash first (re-run compact), then expire.
-    if (fs.listStatus(root).exists(s =>
-        s.isDirectory && s.getPath.getName.startsWith(CompactStagePrefix)))
-      throw new IllegalStateException(
-        s"$dirPath has an unfinished compaction stage: re-run compact() " +
-          "to resolve it before expiring, or expired rows would be " +
-          "resurrected into the seed partition by the stage fold")
-    fs.listStatus(root)
-      .filter(_.isDirectory)
-      .filter { s =>
-        val n = s.getPath.getName
-        n.startsWith("batch=") && {
-          val id = n.stripPrefix("batch=").toLong
-          // ids > seed are stream batches (the re-crawl window being
-          // bounded); ids ≤ seed are the curated seed and the chunked
-          // backfill's synthetic partitions ([[NearDupIndex.backfill]])
-          // — permanent corpus, never expired
-          id > SeedBatchId && id < cutoff
-        }
-      }
-      .foreach(s => fs.delete(s.getPath, true))
-  }
-
-  /** Offline index maintenance shared by [[NearDupIndex.compact]] and
-    * [[SpanIndex.compact]]: fold every `batch=<id>` partition of one
-    * frame into the seed partition.
-    *
-    * ENFORCED precondition: every folded batch id must be ≤
-    * `lastCommittedBatchId` (the checkpoint's commit-log high-water
-    * mark — [[lastCommittedBatch]] reads it) or the call throws
-    * before touching a byte. A batch replayed after its rows were
-    * folded into the seed partition would no longer be excluded by
-    * the probe's own-batch filter — the exact self-match the
-    * per-batch layout exists to prevent — so "the stream is stopped
-    * and committed past every folded batch" is a contract the caller
-    * must PROVE, not a comment they must remember.
-    *
-    * Crash safety by staging, never in-place: the folded superset is
-    * written to a fresh hidden `.compacting-<n>` directory FIRST
-    * (invisible to readers of the frame root), and only then are the
-    * old partitions — including the old seed — deleted and the stage
-    * renamed into place. Re-runs fold any leftover stage directories
-    * back in, so at every crash point the union of what remains on
-    * disk is a superset of the original rows (duplicates are harmless
-    * to the semi-join probes) and re-running converges. The one
-    * window between the deletes and the rename leaves the frame
-    * momentarily EMPTY-looking to a reader — but compaction is
-    * offline by contract (stream stopped), and re-running restores
-    * the frame; no row is ever lost. (The previous in-place
-    * `overwrite` of the seed partition destroyed the only copy of
-    * seed-resident rows before the replacement committed — a crash
-    * there silently and permanently weakened the index.)
-    */
-  private[streaming] def compactFrame(spark: SparkSession, dirPath: String,
-                                      lastCommittedBatchId: Long): Unit = {
-    val root = new org.apache.hadoop.fs.Path(dirPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val children = fs.listStatus(root).filter(_.isDirectory)
-    val batchDirs = children.filter(_.getPath.getName.startsWith("batch="))
-    val staged = children.filter(_.getPath.getName.startsWith(CompactStagePrefix))
-    val uncommitted = batchDirs
-      .map(_.getPath.getName.stripPrefix("batch=").toLong)
-      .filter(id => id != SeedBatchId && id > lastCommittedBatchId)
-    if (uncommitted.nonEmpty)
-      throw new IllegalStateException(
-        s"compact() would fold batch partitions ${uncommitted.sorted.mkString(",")} " +
-          s"of $dirPath, but the checkpoint has only committed through " +
-          s"$lastCommittedBatchId: a replay of an uncommitted batch would " +
-          "match its own folded rows. Stop the stream and pass its " +
-          "commit-log high-water mark (lastCommittedBatch).")
-    // a dir a crashed run created but never wrote data into has no
-    // schema to read — folding it in means skipping it
-    def readable(s: org.apache.hadoop.fs.FileStatus) =
-      fs.listStatus(s.getPath).exists(f => f.isFile &&
-        !f.getPath.getName.startsWith(".") && !f.getPath.getName.startsWith("_"))
-    val srcs = (batchDirs ++ staged).filter(readable).map(_.getPath.toString)
-    if (srcs.isEmpty) return
-    val folded = srcs.map(spark.read.parquet(_)).reduce(_.unionByName(_))
-      .distinct()
-    val stageN = staged.flatMap(s => scala.util.Try(
-      s.getPath.getName.stripPrefix(CompactStagePrefix).toLong).toOption)
-      .maxOption.getOrElse(-1L) + 1
-    val stage = new org.apache.hadoop.fs.Path(root, s"$CompactStagePrefix$stageN")
-    // the lazy `folded` plan reads the OLD dirs while writing the NEW
-    // stage — no read-own-write hazard, so no checkpoint needed
-    folded.write.mode("overwrite").parquet(stage.toString)
-    batchDirs.foreach(s => fs.delete(s.getPath, true))
-    staged.foreach(s => fs.delete(s.getPath, true)) // stageN not in `staged`
-    if (!fs.rename(stage, new org.apache.hadoop.fs.Path(root, s"batch=$SeedBatchId")))
-      throw new IllegalStateException(
-        s"rename of compacted stage $stage into batch=$SeedBatchId failed")
-  }
-}
-
-/** Shared offline-maintenance surface of the persisted per-batch-id
-  * indexes ([[NearDupIndex]], [[SpanIndex]], [[EmbeddingIndex]],
-  * [[PqEmbeddingIndex]]): compaction and horizon expiry applied
-  * uniformly to EVERY frame the index owns — one `frameDirs` list per
-  * index, so adding a frame can never miss a maintenance method and
-  * silently orphan (or, worse, resurrect) its rows.
-  *
-  * Both operations demand the stopped stream's commit-log high-water
-  * mark — pass it directly, or pass the checkpoint dir and let
-  * [[StreamDedup.lastCommittedBatch]] read the proof. See
-  * [[StreamDedup.compactFrame]] (staged crash-safe fold; refuses
-  * uncommitted partitions) and
-  * [[StreamDedup.expireFrameBatchesBelow]] (re-crawl-window
-  * retention; refuses uncommitted cutoffs and unfinished compaction
-  * stages).
-  */
-trait IndexMaintenance {
-  protected def spark: SparkSession
-
-  /** Every per-batch-partitioned frame directory this index owns. */
-  protected def frameDirs: Seq[String]
-
-  /** Fold all batch partitions of every frame into their seed
-    * partitions; throws if any partition id exceeds
-    * `lastCommittedBatchId`.
-    */
-  def compact(lastCommittedBatchId: Long): Unit =
-    frameDirs.foreach(
-      StreamDedup.compactFrame(spark, _, lastCommittedBatchId))
-
-  /** [[compact]] proving the precondition from the stream's own
-    * checkpoint commit log.
-    */
-  def compact(checkpointDir: String): Unit =
-    compact(StreamDedup.lastCommittedBatch(spark, checkpointDir)
-      .getOrElse(StreamDedup.SeedBatchId))
-
-  /** Drop protection for batches below `cutoff` (re-crawl-window
-    * retention); throws if the cutoff is not provably committed or an
-    * unfinished compaction stage could resurrect the expired rows.
-    */
-  def expireBatchesBelow(cutoff: Long, lastCommittedBatchId: Long): Unit =
-    frameDirs.foreach(
-      StreamDedup.expireFrameBatchesBelow(spark, _, cutoff, lastCommittedBatchId))
-
-  /** [[expireBatchesBelow]] proving the precondition from the
-    * stream's own checkpoint commit log.
-    */
-  def expireBatchesBelow(cutoff: Long, checkpointDir: String): Unit =
-    expireBatchesBelow(cutoff,
-      StreamDedup.lastCommittedBatch(spark, checkpointDir)
-        .getOrElse(StreamDedup.SeedBatchId))
 }
 
 /** A persisted, incrementally-maintained MinHash-LSH corpus index for
@@ -414,13 +214,10 @@ trait IndexMaintenance {
   * bucket) and `shingles/` (doc_id, sh), exactly the frames
   * [[graft.operators.Dedup.bandedBuckets]] and
   * [[graft.operators.Dedup.shingleTable]] emit — each partitioned by
-  * the writing micro-batch's id (`batch=<id>/`). Both are created
+  * the writing micro-batch's id ([[BatchFrame]]). Both are created
   * empty (with the real schemas, derived from the same builders over
   * an empty corpus) at construction, so the per-batch probe plan is
-  * identical from batch 0 onward; each frame bootstraps INDEPENDENTLY
-  * and only if missing ([[StreamDedup.bootstrapFrame]]), so a crash
-  * between the two creates leaves the completed frame's rows alone
-  * and the re-run fills only the gap.
+  * identical from batch 0 onward.
   *
   * Replay safety: `foreachBatch` delivers at-least-once, so a batch
   * can re-run after its index rows landed but before the checkpoint
@@ -446,64 +243,43 @@ trait IndexMaintenance {
 class NearDupIndex(protected val spark: SparkSession, dir: String, n: Int = 3,
                    numHashes: Int = 32, bands: Int = 8,
                    minJaccard: Double = 0.5) extends IndexMaintenance {
-  private val postingsDir = s"$dir/postings"
-  private val shinglesDir = s"$dir/shingles"
-  protected def frameDirs: Seq[String] = Seq(postingsDir, shinglesDir)
+  StreamDedup.bindGeometry(spark, dir,
+    Seq("n" -> n, "numHashes" -> numHashes, "bands" -> bands))
+  private val postingsFrame = new BatchFrame(spark, s"$dir/postings",
+    Dedup.bandedBuckets(StreamDedup.emptyDocs(spark), n, numHashes, bands))
+  private val shinglesFrame = new BatchFrame(spark, s"$dir/shingles",
+    Dedup.shingleTable(StreamDedup.emptyDocs(spark), n))
+  private[streaming] def frames = Seq(postingsFrame, shinglesFrame)
 
-  locally {
-    StreamDedup.bindGeometry(spark, dir,
-      Seq("n" -> n, "numHashes" -> numHashes, "bands" -> bands))
-    StreamDedup.bootstrapFrame(spark, postingsDir,
-      Dedup.bandedBuckets(StreamDedup.emptyDocs(spark), n, numHashes, bands))
-    StreamDedup.bootstrapFrame(spark, shinglesDir,
-      Dedup.shingleTable(StreamDedup.emptyDocs(spark), n))
-  }
+  def postings: DataFrame = postingsFrame.read
+  def shingles: DataFrame = shinglesFrame.read
 
-  def postings: DataFrame = spark.read.parquet(postingsDir)
-  def shingles: DataFrame = spark.read.parquet(shinglesDir)
+  /** Each frame with the rows it stores for `docs` (doc_id, text, ...). */
+  private def indexRows(docs: DataFrame) = Seq(
+    postingsFrame -> Dedup.bandedBuckets(docs, n, numHashes, bands),
+    shinglesFrame -> Dedup.shingleTable(docs, n))
 
   /** Index `docs` (doc_id, text, ...) without scrubbing — the one-time
     * backfill that seeds the index from an existing static corpus.
     * (The corpus text is read ONCE, here; never again at probe time.)
     */
-  def append(docs: DataFrame): Unit = {
-    Dedup.bandedBuckets(docs, n, numHashes, bands).write.mode("append")
-      .parquet(s"$postingsDir/batch=${StreamDedup.SeedBatchId}")
-    Dedup.shingleTable(docs, n).write.mode("append")
-      .parquet(s"$shinglesDir/batch=${StreamDedup.SeedBatchId}")
-  }
+  def append(docs: DataFrame): Unit =
+    indexRows(docs).foreach { case (f, rows) => f.seed(rows) }
 
   /** Scrub one micro-batch against the index and grow it: returns the
     * accepted rows (all batch columns) and overwrites the batch's own
     * index partitions, so the NEXT batch's probe sees them —
     * cross-batch near-dups drop — while a REPLAY of this batch id
-    * neither matches its own prior rows nor duplicates them.
-    *
-    * The accepted frame is pinned (materialized) BEFORE the
-    * write: its plan reads the very parquet dirs being written, and a
-    * lazy plan re-evaluated afterwards would see the batch's own
-    * postings and drop everything as a self-match.
+    * neither matches its own prior rows nor duplicates them. NULL-id
+    * rows pass through un-indexed ([[DedupAccept]], the contract body).
     */
-  def accept(batch: DataFrame, batchId: Long): DataFrame = {
-    // NULL-id rows pass through by construction: they have no dedup
-    // identity (a NULL never equi-matches, so the probe could neither
-    // drop them nor index them) and the scrub's id-keyed semi-join
-    // would otherwise silently lose them from the sink
-    val kept = StreamDedup.scrubNearDupsIndexed(
-      batch.filter(col("doc_id").isNotNull),
-      StreamDedup.exceptBatch(postings, batchId),
-      StreamDedup.exceptBatch(shingles, batchId),
-      n, numHashes, bands, minJaccard)
-      .unionByName(batch.filter(col("doc_id").isNull))
-      .transform(graft.core.Pin.pin(_))
-    val keptDocs = kept.filter(col("doc_id").isNotNull)
-      .select(col("doc_id"), col("text"))
-    Dedup.bandedBuckets(keptDocs, n, numHashes, bands).write.mode("overwrite")
-      .parquet(s"$postingsDir/batch=$batchId")
-    Dedup.shingleTable(keptDocs, n).write.mode("overwrite")
-      .parquet(s"$shinglesDir/batch=$batchId")
-    kept
-  }
+  def accept(batch: DataFrame, batchId: Long): DataFrame =
+    DedupAccept(batch, Seq("doc_id"))(real => Dedup.minhashProbe(real,
+      postingsFrame.except(batchId), shinglesFrame.except(batchId),
+      n, numHashes, bands, minJaccard)) { kept =>
+      indexRows(kept.select(col("doc_id"), col("text")))
+        .foreach { case (f, rows) => f.write(rows, batchId) }
+    }
 
   /** Dedup-and-index a STATIC corpus in bounded slices
     * ([[StreamDedup.chunkedBackfill]]) — the guard the
@@ -558,30 +334,23 @@ object NearDupIndex {
   */
 class SpanIndex(protected val spark: SparkSession, dir: String, k: Int = 8)
     extends IndexMaintenance {
-  private val gramsDir = s"$dir/grams"
-  protected def frameDirs: Seq[String] = Seq(gramsDir)
+  StreamDedup.bindGeometry(spark, dir, Seq("k" -> k))
+  private val gramsFrame = new BatchFrame(spark, s"$dir/grams",
+    Dedup.gramTable(StreamDedup.emptyDocs(spark), k))
+  private[streaming] def frames = Seq(gramsFrame)
 
-  locally {
-    StreamDedup.bindGeometry(spark, dir, Seq("k" -> k))
-    StreamDedup.bootstrapFrame(spark, gramsDir,
-      Dedup.gramTable(StreamDedup.emptyDocs(spark), k))
-  }
-
-  def grams: DataFrame = spark.read.parquet(gramsDir)
+  def grams: DataFrame = gramsFrame.read
 
   /** Index `docs` (doc_id, text, ...) without scrubbing — the one-time
     * seed from an existing static corpus.
     */
-  def append(docs: DataFrame): Unit =
-    Dedup.gramTable(docs, k).write.mode("append")
-      .parquet(s"$gramsDir/batch=${StreamDedup.SeedBatchId}")
+  def append(docs: DataFrame): Unit = gramsFrame.seed(Dedup.gramTable(docs, k))
 
   /** This batch's duplicate spans vs the index ∪ the batch itself,
     * excluding any prior attempt of the same batch id.
     */
   def spans(batch: DataFrame, batchId: Long): DataFrame =
-    Dedup.duplicateSpansProbe(
-      batch, StreamDedup.exceptBatch(grams, batchId), k)
+    Dedup.duplicateSpansProbe(batch, gramsFrame.except(batchId), k)
 
   /** Scrub one micro-batch: returns the batch with every span already
     * seen (or shared within the batch) excised — all non-text batch
@@ -607,8 +376,7 @@ class SpanIndex(protected val spark: SparkSession, dir: String, k: Int = 8)
       .join(Dedup.exciseWith(realIds, spans(batch, batchId)), Seq("doc_id"))
       .unionByName(nullIdRows)
       .transform(graft.core.Pin.pin(_))
-    Dedup.gramTable(batch, k).write.mode("overwrite")
-      .parquet(s"$gramsDir/batch=$batchId")
+    gramsFrame.write(Dedup.gramTable(batch, k), batchId)
     cleaned
   }
 
@@ -630,26 +398,19 @@ class SpanIndex(protected val spark: SparkSession, dir: String, k: Int = 8)
   */
 class ExactIndex(protected val spark: SparkSession, dir: String)
     extends IndexMaintenance {
-  private val hashesDir = s"$dir/hashes"
-  protected def frameDirs: Seq[String] = Seq(hashesDir)
+  private val hashesFrame = new BatchFrame(spark, s"$dir/hashes",
+    StreamDedup.emptyDocs(spark).select(md5(col("text")).as("content_hash")))
+  private[streaming] def frames = Seq(hashesFrame)
 
-  locally {
-    StreamDedup.bootstrapFrame(spark, hashesDir,
-      StreamDedup.emptyDocs(spark)
-        .select(md5(col("text")).as("content_hash")))
-  }
-
-  def hashes: DataFrame = spark.read.parquet(hashesDir)
+  def hashes: DataFrame = hashesFrame.read
 
   /** Index `docs` (text, ...) without scrubbing — the one-time seed
     * from an existing static corpus. Text is read once, here; the
     * index stores only its hashes.
     */
   def append(docs: DataFrame): Unit =
-    docs.filter(col("text").isNotNull)
-      .select(md5(col("text")).as("content_hash")).distinct()
-      .write.mode("append")
-      .parquet(s"$hashesDir/batch=${StreamDedup.SeedBatchId}")
+    hashesFrame.seed(docs.filter(col("text").isNotNull)
+      .select(md5(col("text")).as("content_hash")).distinct())
 
   /** Keep only batch rows whose content is unseen (index ∪ lower-id
     * in-batch keeper), then grow the index with the accepted hashes.
@@ -657,17 +418,10 @@ class ExactIndex(protected val spark: SparkSession, dir: String)
     * un-indexed — neither has a dedup identity the equi-joins could
     * act on (the uniform NULL contract of every index accept).
     */
-  def accept(batch: DataFrame, batchId: Long): DataFrame = {
-    val real = batch.filter(col("doc_id").isNotNull && col("text").isNotNull)
-    val kept = real
-      .join(Dedup.exactProbe(real,
-        StreamDedup.exceptBatch(hashes, batchId)).select("doc_id"),
-        Seq("doc_id"), "left_semi")
-      .unionByName(batch.filter(col("doc_id").isNull || col("text").isNull))
-      .transform(graft.core.Pin.pin(_))
-    kept.filter(col("doc_id").isNotNull && col("text").isNotNull)
-      .select(md5(col("text")).as("content_hash")).distinct()
-      .write.mode("overwrite").parquet(s"$hashesDir/batch=$batchId")
-    kept
-  }
+  def accept(batch: DataFrame, batchId: Long): DataFrame =
+    DedupAccept(batch, Seq("doc_id", "text"))(real =>
+      Dedup.exactProbe(real, hashesFrame.except(batchId)).select("doc_id")) { kept =>
+      hashesFrame.write(
+        kept.select(md5(col("text")).as("content_hash")).distinct(), batchId)
+    }
 }

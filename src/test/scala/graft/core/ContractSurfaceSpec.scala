@@ -15,8 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * without an oracle is bench-only, so the bench-only set is pinned.
   * Source audits keep the mains' session setup and byte counting in
   * [[GraftSession]] instead of per-main copies, and query registrations
-  * in the registry instead of a second map in SparkEntry, and keep every
-  * operator inside Catalyst (no RDD round-trip out of the planner).
+  * in the registry instead of a second map in SparkEntry, keep every
+  * operator inside Catalyst (no RDD round-trip out of the planner), and
+  * keep the persisted indexes' per-batch layout in one type.
   */
 class ContractSurfaceSpec extends AnyFunSuite {
 
@@ -80,6 +81,23 @@ class ContractSurfaceSpec extends AnyFunSuite {
       assert(hits.isEmpty,
         s"$token in $hits: plan the operator as a logical + exec node instead")
     }
+  }
+
+  test("the per-batch index layout lives in BatchFrame: no other " +
+       "streaming source spells a batch= path or infers a frame schema") {
+    val streaming = sources.filter(_.toString.contains("graft/streaming/"))
+    assert(streaming.nonEmpty, "run from the repository root")
+    // code lines only: the docs describe the layout in these terms
+    val hits = for {
+      p <- streaming if p.getFileName.toString != "BatchFrame.scala"
+      line <- java.nio.file.Files.readAllLines(p).asScala
+      code = line.trim if !Seq("*", "/*", "//").exists(code.startsWith)
+      token <- Seq("batch=", "spark.read.parquet(") if code.contains(token)
+    } yield (p.getFileName.toString, token)
+    // the sink's own batch dirs and the PQ codebook are not index frames
+    assert(hits.sorted == Seq(("EmbeddingIndex.scala", "spark.read.parquet("),
+      ("StreamSink.scala", "batch=")),
+      s"layout spelled outside BatchFrame: $hits")
   }
 
   test("bench surface covers every contract query") {

@@ -54,7 +54,7 @@ class StreamScrubSpec extends SparkSpec {
       4L -> "the a of",                               // too short
       5L -> fluent.replace("joy", "glee"))            // passes
     val mem = MemoryStream[(Long, String)]
-    val gated = graft.operators.Corpus.gopherGateRows(
+    val gated = graft.operators.Corpus.gopherGate(
       mem.toDF().toDF("doc_id", "text"))
     val q = gated.writeStream.format("memory")
       .queryName("gate_sink").outputMode("append").start()
