@@ -28,7 +28,7 @@ object Mart {
     * `normalized_location` and the fact's surrogate-key join all read
     * that one frame. Each write is a separate query, so Catalyst cannot
     * share the subtree across them; unpinned, each consumer would re-run
-    * the bucketed surrogate rank. One build also gives referential
+    * the surrogate rank's range exchange, sort and two passes. One build also gives referential
     * integrity by construction: every fact `location_key` is a key of
     * the written `dim_location`. The date, band and precipitation dims
     * and the fact share one staging frame (one schema read, not four).

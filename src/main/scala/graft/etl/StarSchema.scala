@@ -1,5 +1,6 @@
 package graft.etl
 
+import graft.plans.GlobalPrefix
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -32,137 +33,35 @@ object StarSchema {
       weekofyear(col("date_key")).cast("long").as("week_of_year"),
       dayofyear(col("date_key")).cast("long").as("day_of_year"))
 
-  /** Order-preserving deterministic bucketing on the first order column
-    * (shared by [[globalRank]] and [[globalPrefixSum]]): numeric →
-    * fixed-width buckets from exact min/max; string → first-character
-    * bucket. No sampling (unlike `repartitionByRange`), so every
-    * subtree that recomputes the bucketing agrees on it.
+  /** Global row numbering: `ROW_NUMBER() OVER (ORDER BY orderBy)` as
+    * long `keyName`, without an unpartitioned window — a billion-row
+    * entity table never funnels through one task. One planner node
+    * ([[graft.plans.GlobalPrefix]]): a range exchange, a sort, a
+    * per-partition count and a pass that adds each partition's offset.
+    * NULL order keys rank first, as ROW_NUMBER's default ordering puts
+    * them.
     */
-  private def orderBucket(src: DataFrame, orderKey: String,
-                          buckets: Int): DataFrame => DataFrame = {
-    import org.apache.spark.sql.types.{DateType, NumericType, StringType,
-      TimestampType}
-    val k = col(orderKey)
-    // numeric image of the key, order-preserving (dates/timestamps map
-    // to their epoch offset): anything here gets exact-min/max range
-    // buckets; the constant fallback below is a single-partition funnel
-    // AND Catalyst folds the literal partition key away, leaving an
-    // unpartitioned WindowExec
-    val numericKey = src.schema(orderKey).dataType match {
-      case _: NumericType => Some(k.cast("double"))
-      case DateType => Some(unix_date(k).cast("double"))
-      case TimestampType => Some(unix_micros(k).cast("double"))
-      case _ => None
-    }
-    numericKey match {
-      case Some(nk) =>
-        // exact min/max (deterministic, unlike range-partitioner sampling)
-        val stats = src.agg(min(nk).as("__lo"), max(nk).as("__hi"))
-        (df: DataFrame) => df.crossJoin(broadcast(stats))
-          .withColumn("__bkt", least(lit(buckets - 1),
-            floor((nk - col("__lo")) * buckets /
-              (col("__hi") - col("__lo") + 1d)).cast("int")))
-          .drop("__lo", "__hi")
-      case None if src.schema(orderKey).dataType == StringType =>
-        (df: DataFrame) => df.withColumn("__bkt",
-          coalesce(ascii(substring(k, 1, 1)), lit(0)))
-      case None =>
-        (df: DataFrame) => df.withColumn("__bkt", lit(0))
-    }
-  }
+  def globalRank(src: DataFrame, orderBy: Seq[String], keyName: String): DataFrame =
+    GlobalPrefix.rank(src, orderBy, keyName)
 
-  /** The bucketed two-phase scaffold every global ordered aggregate
-    * here shares ([[globalRank]] / [[globalPrefixSum]] /
-    * [[globalPrefixMax]]): order-preserving buckets → a per-bucket
-    * windowed local value → per-bucket totals → triangular offsets of
-    * the PRIOR buckets' totals → broadcast join back and combine. The
-    * locally-windowed frame feeds BOTH the totals and the final join;
-    * without pinning, each consumer replays the whole upstream lineage
-    * (source scan + distinct + the min/max stats subtree), so it is
-    * pinned ([[graft.core.Pin]]) once — one pass of the input plus two
-    * small columns, and the offsets pass cannot start before it anyway.
-    */
-  private def bucketedTwoPhase(src: DataFrame, orderBy: Seq[String],
-                               buckets: Int, outName: String)(
-      localOver: org.apache.spark.sql.expressions.WindowSpec => Column,
-      bucketTotal: Column,
-      offsetOf: Column => Column,
-      combine: (Column, Column) => Column): DataFrame = {
-    val bucket = orderBucket(src, orderBy.head, buckets)
-    val w = Window.partitionBy("__bkt").orderBy(orderBy.map(col): _*)
-    val local = bucket(src).withColumn("__loc", localOver(w))
-      .transform(graft.core.Pin.pin(_, eager = false))
-    val totals = local.groupBy("__bkt").agg(bucketTotal.as("__tot"))
-    val offsets = totals.as("a")
-      .join(totals.as("b"), col("b.__bkt") < col("a.__bkt"), "left")
-      .groupBy(col("a.__bkt").as("__bkt"))
-      .agg(offsetOf(col("b.__tot")).as("__off"))
-    local.join(broadcast(offsets), "__bkt")
-      .withColumn(outName, combine(col("__off"), col("__loc")))
-      .drop("__bkt", "__loc", "__off")
-  }
-
-  /** Global dense row numbering WITHOUT an unpartitioned window.
-    *
-    * `ROW_NUMBER() OVER (ORDER BY …)` funnels the whole input through a
-    * single task — fine for a 5-row dim, fatal for a billion-row entity
-    * table. This produces bit-identical ranks scalably:
-    *
-    *  1. bucket each row by an order-preserving, DETERMINISTIC function
-    *     of the first order column (numeric → fixed-width buckets from
-    *     exact min/max; string → first-character bucket). No sampling
-    *     (unlike `repartitionByRange`), so every subtree that recomputes
-    *     the bucketing agrees on it;
-    *  2. ROW_NUMBER within each bucket (a partitioned window — parallel);
-    *  3. per-bucket counts → cumulative offsets via a tiny
-    *     buckets×buckets self-join (≤ a few hundred rows — broadcast);
-    *  4. rank = offset + local row number.
-    *
-    * Buckets are order-preserving, so offset+local == the global
-    * ROW_NUMBER under the same total order. Width buckets can skew
-    * (bounded by buckets× the average for id-like keys); that trades a
-    * bounded imbalance for determinism and zero driver collection.
-    */
-  def globalRank(src: DataFrame, orderBy: Seq[String], keyName: String,
-                 buckets: Int = 64): DataFrame =
-    bucketedTwoPhase(src, orderBy, buckets, keyName)(
-      w => row_number().over(w),
-      count(lit(1)),
-      t => coalesce(sum(t), lit(0L)),
-      (off, rn) => (off + rn).cast("long"))
-
-  /** Global INCLUSIVE prefix sum of `valueCol` under the total order
-    * `orderBy` — the running-total twin of [[globalRank]], with the
-    * same two-phase shape: partitioned running sums within
-    * order-preserving buckets, then a broadcast of per-bucket totals'
-    * cumulative offsets. `orderBy` must be a total order (unique key
-    * tuple); the window frame is ROWS-based so peers never collapse.
+  /** Global INCLUSIVE prefix sum of `valueCol` (long) under the total
+    * order `orderBy` — the running-total twin of [[globalRank]], on the
+    * same node. `orderBy` must be a total order (unique key tuple) or
+    * tied rows split their running totals arbitrarily.
     */
   def globalPrefixSum(src: DataFrame, orderBy: Seq[String], valueCol: String,
-                      outName: String, buckets: Int = 64): DataFrame =
-    bucketedTwoPhase(src, orderBy, buckets, outName)(
-      w => sum(col(valueCol)).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
-      sum(col(valueCol)),
-      t => coalesce(sum(t), lit(0L)),
-      (off, ps) => (off + ps).cast("long"))
+                      outName: String): DataFrame =
+    GlobalPrefix.sum(src, orderBy, valueCol, outName)
 
   /** Global EXCLUSIVE prefix MAX of `valueCol` under the total order
     * `orderBy` — the running-max sibling of [[globalPrefixSum]]
     * (sweep-line algorithms like the skyline need "best seen among
-    * STRICTLY earlier rows"): per-bucket exclusive running max within
-    * order-preserving buckets, then a broadcast of prior buckets'
-    * maxes. NULL where no earlier row exists. Never an unpartitioned
-    * window, whatever the row count.
+    * STRICTLY earlier rows"). NULL where no earlier row exists. Never an
+    * unpartitioned window, whatever the row count.
     */
   def globalPrefixMax(src: DataFrame, orderBy: Seq[String], valueCol: String,
-                      outName: String, buckets: Int = 64): DataFrame =
-    bucketedTwoPhase(src, orderBy, buckets, outName)(
-      w => max(col(valueCol)).over(
-        w.rowsBetween(Window.unboundedPreceding, -1)),
-      max(col(valueCol)),
-      t => max(t),
-      (off, pm) => greatest(off, pm))
+                      outName: String): DataFrame =
+    GlobalPrefix.priorMax(src, orderBy, valueCol, outName)
 
   /** Point-in-time (temporal) join against an SCD2 dimension: each
     * observation row picks the dimension VERSION whose validity
@@ -228,7 +127,7 @@ object StarSchema {
     * leaves historical rows unmatched, so they exit verbatim through
     * the untouched branch of a 3-way union over that one joined frame.
     * The 1-row max-key aggregate reads that joined frame and
-    * broadcasts; the surrogate window runs
+    * broadcasts; the surrogate rank runs
     * only over NEW rows (a dimension-sized, not fact-sized, set).
     */
   def scd2Merge(dim: DataFrame, snapshot: DataFrame, businessKey: Seq[String],

@@ -90,8 +90,8 @@ object TimeSeries {
     * big⋈big, no extra exchange); the ±1 table aggregates to day
     * grain (map-side combined) BEFORE any ordering, so the sweep runs
     * on thousands of rows however large the fact; and the running sum
-    * is [[StarSchema.globalPrefixSum]] — the bucketed two-phase
-    * running total, never an unpartitioned window. A naive
+    * is [[StarSchema.globalPrefixSum]] — a range-partitioned running
+    * total, never an unpartitioned window. A naive
     * per-day interval-stabbing join (days × open intervals) would be
     * quadratic at 100 TB; the sweep is one fact pass.
     *
@@ -106,8 +106,8 @@ object TimeSeries {
       .orderBy("day")
 
   /** The fact-sized half of [[orderBacklog]] (everything before the
-    * day-grain prefix sum) — exposed for the plan audit, which cannot
-    * see past globalPrefixSum's checkpoint.
+    * day-grain prefix sum) — exposed so the plan audit can check it
+    * alone.
     */
   private[graft] def backlogDeltas(spark: SparkSession, dir: String): DataFrame = {
     val orders = graft.core.Tables(spark, dir, "orders")

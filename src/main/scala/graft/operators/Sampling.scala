@@ -118,7 +118,7 @@ object Sampling {
   /** Token-budget shard packing: assign documents (in doc_id order) to
     * consecutive training shards of ~`budget` tokens each — shard =
     * floor(exclusive-prefix-tokens / budget). The prefix sum is
-    * [[StarSchema.globalPrefixSum]] (two-phase, bucketed), so packing a
+    * [[StarSchema.globalPrefixSum]] (range-partitioned), so packing a
     * trillion-token corpus never funnels through one task. Returns the
     * per-shard manifest.
     */

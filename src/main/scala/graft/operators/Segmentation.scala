@@ -70,7 +70,7 @@ object Segmentation {
     * top-heavy is the customer base" planning query.
     *
     * Scale shape: one custkey aggregate over the fact, then rank and
-    * running total both come from the bucketed two-phase primitives
+    * running total both come from the range-partitioned primitives
     * ([[graft.etl.StarSchema.globalRank]] / `globalPrefixSum`) — a
     * billion-customer spend table never funnels through one window
     * task. The threshold probe is ONE conditional aggregate (min rank
@@ -118,7 +118,7 @@ object Segmentation {
     * survives iff its gain equals its cost-group's max AND strictly
     * exceeds the best gain among all STRICTLY cheaper rows — one
     * cost-grain aggregate plus the exclusive
-    * [[graft.etl.StarSchema.globalPrefixMax]] (bucketed two-phase, no
+    * [[graft.etl.StarSchema.globalPrefixMax]] (range-partitioned, no
     * unpartitioned window), then a hash join back to the rows. The
     * oracle replays the QUADRATIC dominance definition, so the sweep
     * is cross-checked against the definition it optimizes. Ties on

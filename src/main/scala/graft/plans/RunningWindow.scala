@@ -1,15 +1,14 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference,
-  AttributeSet, GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.QueryPlan
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Sort, UnaryNode}
+  GenericInternalRow, JoinedRow, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution,
   Distribution, Partitioning}
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graft.Bridge
@@ -31,9 +30,10 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   * computes them with no group buffer, no frame re-aggregation, and
   * no per-row allocation beyond the output row itself.
   *
-  * This is graft's one custom planner node (compose > custom
-  * Expression > custom plan), taken only after the composed form was
-  * measured as the scale bottleneck on the flagship reference query:
+  * This is one of graft's two custom planner nodes (compose > custom
+  * Expression > custom plan; the other is [[GlobalPrefix]]), taken only
+  * after the composed form was measured as the scale bottleneck on the
+  * flagship reference query:
   * the logical [[RunningWindowNode]], planned by [[RunningWindow.Planning]]
   * into [[RunningWindowExec]]. The exec node states what it needs —
   * rows clustered by the window key and sorted by (key, order) — so
@@ -76,14 +76,7 @@ object RunningWindow {
                             sumCol: String, n: Int,
                             deltaName: String, sumName: String): DataFrame = {
     Planning.install(df.sparkSession)
-    // the analyzer resolves (key +: order) against df exactly as a
-    // sortWithinPartitions would; the node keeps that ordering as its
-    // child requirement and drops the Sort itself
-    val (ordering, child) =
-      df.sortWithinPartitions(col(partCol) +: order: _*).queryExecution.analyzed match {
-        case Sort(o, false, c, _) => (o, c)
-        case p => throw new IllegalStateException(s"unexpected sort plan:\n$p")
-      }
+    val (ordering, child) = NodePlanning.sortedChild(df, col(partCol) +: order)
     val schema = df.schema
     def attr(name: String): Attribute = child.output(schema.fieldIndex(name))
     require(attr(partCol).dataType == LongType,
@@ -96,36 +89,15 @@ object RunningWindow {
       AttributeReference(sumName, DoubleType)(), child))
   }
 
-  /** Plans [[RunningWindowNode]]; a session without it fails with "No
-    * plan for RunningWindowNode", so [[lagDeltaAndRollingSum]] installs it.
-    */
-  private[graft] object Planning extends SparkStrategy {
+  /** Plans [[RunningWindowNode]]; [[lagDeltaAndRollingSum]] installs it. */
+  private[graft] object Planning extends NodePlanning {
     def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
       case w: RunningWindowNode =>
         RunningWindowExec(w.partCol, w.ordering, w.lagCol, w.sumCol, w.n,
           w.delta, w.rolling, planLater(w.child)) :: Nil
       case _ => Nil
     }
-
-    /** Idempotent: a session holds the strategy at most once. */
-    def install(spark: SparkSession): Unit = synchronized {
-      val exp = spark.experimental
-      if (!exp.extraStrategies.contains(this))
-        exp.extraStrategies = this +: exp.extraStrategies
-    }
   }
-}
-
-/** The output both nodes declare: `child`'s columns plus the two
-  * window metrics `delta` and `rolling`, which the node produces.
-  */
-private[plans] trait RunningWindowOutput[T <: QueryPlan[T]] extends QueryPlan[T] {
-  self: T =>
-  def child: T
-  def delta: Attribute
-  def rolling: Attribute
-  override def output: Seq[Attribute] = child.output :+ delta :+ rolling
-  override def producedAttributes: AttributeSet = AttributeSet(Seq(delta, rolling))
 }
 
 /** The columns pass through, so ColumnPruning narrows the child to what
@@ -137,7 +109,8 @@ case class RunningWindowNode(partCol: Attribute, ordering: Seq[SortOrder],
                              lagCol: Attribute, sumCol: Attribute, n: Int,
                              delta: Attribute, rolling: Attribute,
                              child: LogicalPlan)
-    extends UnaryNode with RunningWindowOutput[LogicalPlan] {
+    extends UnaryNode with AppendsColumns[LogicalPlan] {
+  override def appended: Seq[Attribute] = Seq(delta, rolling)
   override protected def withNewChildInternal(c: LogicalPlan): RunningWindowNode =
     copy(child = c)
 }
@@ -146,7 +119,8 @@ case class RunningWindowExec(partCol: Attribute, ordering: Seq[SortOrder],
                              lagCol: Attribute, sumCol: Attribute, n: Int,
                              delta: Attribute, rolling: Attribute,
                              child: SparkPlan)
-    extends UnaryExecNode with RunningWindowOutput[SparkPlan] {
+    extends UnaryExecNode with AppendsColumns[SparkPlan] {
+  override def appended: Seq[Attribute] = Seq(delta, rolling)
   override def requiredChildDistribution: Seq[Distribution] =
     ClusteredDistribution(Seq(partCol)) :: Nil
   override def requiredChildOrdering: Seq[Seq[SortOrder]] = ordering :: Nil

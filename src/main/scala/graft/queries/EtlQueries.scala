@@ -631,7 +631,7 @@ object EtlQueries {
         |FROM j ORDER BY loc_ref, cal_date""".stripMargin),
       sortKeys = by("loc_ref", "cal_date"), bigSort = true),
     // sweep-line backlog: ±1 interval events → day-grain aggregate →
-    // bucketed global prefix sum (never an unpartitioned window)
+    // range-partitioned global prefix sum (never an unpartitioned window)
     QuerySpec("orders_backlog", (s, d) => graft.etl.TimeSeries.orderBacklog(s, d),
       // Mirrors TimeSeries.orderBacklog: ±1 sweep events at open / day
       // after close, day-grain net change, running-sum stabbing count.

@@ -340,12 +340,12 @@ object EventQueries {
         |FROM r WHERE rn = 1 ORDER BY user_id""".stripMargin),
       sortKeys = by("user_id")),
     // user-growth accounting: first-seen day per user + cumulative
-    // base via the bucketed two-phase prefix sum (never an
+    // base via the range-partitioned prefix sum (never an
     // unpartitioned count-distinct window)
     QuerySpec("user_growth", (s, d) => Sessionize.userGrowth(Tables(s, d, "events")),
       // Mirrors Sessionize.userGrowth: first-seen day per user, day-grain
       // new-user counts, running total (the prefix sum the Spark side
-      // computes with the bucketed two-phase primitive).
+      // computes with StarSchema.globalPrefixSum).
       sql("""WITH f AS (
         |  SELECT user_id, MIN(CAST(ts AS DATE)) AS day
         |  FROM events GROUP BY user_id),

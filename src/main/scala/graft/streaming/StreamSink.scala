@@ -21,7 +21,8 @@ object StreamSink {
     * (failure between sink write and checkpoint commit) rewrites the
     * same rows instead of appending duplicates — exactly-once output
     * on top of foreachBatch's at-least-once semantics. Read the sink
-    * back with `spark.read.parquet(s"$dir/batch=*")`.
+    * back with `spark.read.parquet(dir)`: partition discovery adds the
+    * batch id as column `batch`.
     *
     * Usage: `df.writeStream.foreachBatch(StreamSink.idempotentParquet(dir))`.
     */

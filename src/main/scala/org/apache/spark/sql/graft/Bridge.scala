@@ -8,10 +8,10 @@ import org.apache.spark.sql.classic.ColumnConversions
 
 /** Minimal bridge into Spark 4's classic Column↔Expression converters
   * and `Dataset.ofRows`, so graft can expose native Catalyst
-  * expressions and its one logical node ([[graft.plans.RunningWindow]])
-  * through the public DataFrame API. Lives in an org.apache.spark.sql
-  * subpackage purely for access (private[sql]); contains no
-  * Spark-internal logic.
+  * expressions and its logical nodes ([[graft.plans.RunningWindow]],
+  * [[graft.plans.GlobalPrefix]]) through the public DataFrame API.
+  * Lives in an org.apache.spark.sql subpackage purely for access
+  * (private[sql]); contains no Spark-internal logic.
   */
 object Bridge {
   def column(e: Expression): Column = Column(e)

@@ -3,9 +3,9 @@ package graft
 import graft.etl.{Cube, Dashboard, WeatherMart}
 import graft.operators.{AsOfJoin, Corpus, Dedup, Sessionize, Similarity}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{RDDScanExec, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
-  BroadcastQueryStageExec, QueryStageExec}
+  AdaptiveSparkPlanHelper, BroadcastQueryStageExec, QueryStageExec}
 import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 import org.apache.spark.sql.functions._
 
@@ -31,43 +31,47 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
+  /** Nodes of an executed plan matching `is`, outside every broadcast
+    * (dimension) subtree.
+    */
+  private def factSide(p: SparkPlan)(is: SparkPlan => Boolean): Int = p match {
+    case _: BroadcastQueryStageExec => 0
+    case _ if is(p) => 1
+    case a: AdaptiveSparkPlanExec => factSide(a.executedPlan)(is)
+    case q: QueryStageExec => factSide(q.plan)(is)
+    case _ => p.children.map(factSide(_)(is)).sum
+  }
+
   // The fact's star join: staging ⋈ broadcast(current dim_location) on
   // the postal code; the date dimension is a not-null filter on the
   // staging date and the source key a constant, neither a join. Above
   // it, the RunningWindow node asks for location_key clustering and the
   // window order, so EnsureRequirements places one exchange and one
-  // sort. The fact rows stay inside the plan: an ExistingRDD scan may
-  // only feed a broadcast dimension (dim_location's rank is pinned by
-  // StarSchema.globalRank), never the fact side.
+  // sort. Every row stays inside the plan: dim_location's surrogate
+  // rank is the GlobalPrefix node, not a pinned RDD, so no ExistingRDD
+  // scan feeds either side.
   test("fact star join is all-broadcast: no sort-merge join, no fact-side shuffle for joins") {
     val df = WeatherMart.fact(spark, sf())
     val plan = finalPlan(df)
     assert(!plan.contains("SortMergeJoin"), s"fact join degraded to SMJ:\n$plan")
     assert(plan.contains("BroadcastHashJoin"), plan)
     assert(plan.contains("RunningWindow"), s"fact window node missing:\n$plan")
-    // nodes outside every broadcast (dimension) subtree
-    def factSide(p: SparkPlan)(is: SparkPlan => Boolean): Int = p match {
-      case _: BroadcastQueryStageExec => 0
-      case _ if is(p) => 1
-      case a: AdaptiveSparkPlanExec => factSide(a.executedPlan)(is)
-      case q: QueryStageExec => factSide(q.plan)(is)
-      case _ => p.children.map(factSide(_)(is)).sum
-    }
     val executed = df.queryExecution.executedPlan
-    assert(factSide(executed)(_.isInstanceOf[RDDScanExec]) == 0,
-      s"fact rows come from an RDD, not from the planned star join:\n$plan")
+    assert(new AdaptiveSparkPlanHelper {}.find(executed)(_.isInstanceOf[RDDScanExec]).isEmpty,
+      s"rows come from an RDD, not from the planned star join:\n$plan")
     // the source key is a constant: no nested-loop cross join with the
-    // one-row source dimension (dim_location's own bucket offsets, a
-    // non-equi join inside its broadcast subtree, do not count)
+    // one-row source dimension
     assert(factSide(executed)(_.isInstanceOf[BroadcastNestedLoopJoinExec]) == 0,
       s"fact crosses in the one-row source dimension:\n$plan")
   }
 
   test("both fact window metrics share a single location_key exchange") {
-    val plan = finalPlan(WeatherMart.fact(spark, sf()))
+    val df = WeatherMart.fact(spark, sf())
+    val plan = finalPlan(df)
     val n = "hashpartitioning\\(location_key".r.findAllMatchIn(plan).length
     assert(n == 1, s"expected exactly 1 window exchange, saw $n:\n$plan")
-    val sorts = "\\bSort \\[".r.findAllMatchIn(plan).length
+    // dim_location's broadcast holds its rank's own sort
+    val sorts = factSide(df.queryExecution.executedPlan)(_.isInstanceOf[SortExec])
     assert(sorts == 1, s"expected exactly 1 sort under the window node, saw $sorts:\n$plan")
     assert("RunningWindow[^\n]*\n[^\n]*Sort \\[location_key".r.findFirstIn(plan).isDefined,
       s"the window node does not read the location_key sort directly:\n$plan")
@@ -101,8 +105,7 @@ class PlanAuditSpec extends SparkSpec {
       val plan = finalPlan(df)
       assert(!plan.contains("hashpartitioning(location_key"),
         s"$name should not shuffle by location_key — window metrics unused:\n$plan")
-      // the fact's LAG/rolling metrics must be pruned away (the only
-      // Window allowed is the dim build's bucketed surrogate rank)
+      // the fact's LAG/rolling metrics must be pruned away
       assert(!plan.contains("temp_day_delta") && !plan.contains("precipitation_7d_sum"),
         s"$name computes unused fact window metrics:\n$plan")
     }
@@ -155,12 +158,9 @@ class PlanAuditSpec extends SparkSpec {
     assert(quota.contains("WindowGroupLimit"),
       s"quota ranks every row instead of top-k per source:\n$quota")
     val pack = finalPlan(operators.Sampling.shardPack(docs))
-    // every Window must be partitioned (the bucketed prefix-sum) — an
-    // unpartitioned one would funnel the corpus through a single task
-    "Window \\[[^\\]]*windowspecdefinition\\(".r.findAllMatchIn(pack).foreach { m =>
-      assert(pack.substring(m.start, math.min(pack.length, m.end + 40))
-        .contains("__bkt"), s"global window in shard pack:\n$pack")
-    }
+    // the prefix sum is a GlobalPrefix node, so no Window at all — a
+    // global one would funnel the corpus through a single task
+    assert(!pack.contains("Window"), s"window in shard pack:\n$pack")
     val mix = finalPlan(operators.Sampling.mixture(docs, Map("src1" -> 0.5)))
     assert(!mix.contains("Window"), s"mixture must be a pure filter+agg:\n$mix")
   }
@@ -348,14 +348,13 @@ class PlanAuditSpec extends SparkSpec {
     assert(plan.contains("BroadcastHashJoin"), s"dims didn't broadcast:\n$plan")
   }
 
-  test("pareto coverage: no window outside the bucketed two-phase " +
-       "primitives (their windows run inside checkpointed stages)") {
+  test("pareto coverage: no window node, the rank and running total " +
+       "are GlobalPrefix nodes") {
     val plan = finalPlan(SparkEntry.queries("orders_pareto")(spark, sf()))
-    // globalRank/globalPrefixSum windows are __bkt-partitioned and
-    // materialize behind their localCheckpoint, so the composed plan
-    // must show NO Window node at all — one appearing here means the
-    // probe stage grew a (necessarily global) window over the ranked
-    // spend table
+    // globalRank/globalPrefixSum are GlobalPrefix nodes over a range
+    // exchange, not windows, so the composed plan must show NO Window
+    // node at all — one appearing here means the probe stage grew a
+    // (necessarily global) window over the ranked spend table
     assert(!plan.contains("Window"), s"unexpected window node:\n$plan")
   }
 
@@ -553,8 +552,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("orders_backlog deltas: close aggregate's key partitioning serves the " +
        "join; ±1s aggregate to day grain with no sort-merge degradation") {
-    // audit the fact-sized half directly — the composed query's plan
-    // hides it behind globalPrefixSum's checkpoint
+    // audit the fact-sized half alone, below the day-grain prefix sum
     val plan = finalPlan(graft.etl.TimeSeries.backlogDeltas(spark, sf()))
     assert(!plan.contains("SortMergeJoin"), s"backlog join degraded to SMJ:\n$plan")
     // the orders⋈closes join rides the close aggregate's own
@@ -571,8 +569,8 @@ class PlanAuditSpec extends SparkSpec {
   /** Windows whose partition spec is empty OR entirely foldable: both
     * funnel every row through one task (Catalyst folds a constant
     * partition key away, leaving the same unpartitioned WindowExec —
-    * the orderBucket DATE-key regression shipped exactly that way
-    * because only the cartesian sweep was global).
+    * a DATE-keyed bucketing once shipped exactly that way because
+    * only the cartesian sweep was global).
     */
   private def unpartitionedWindows(df: DataFrame): Seq[String] =
     df.queryExecution.optimizedPlan.collect {

@@ -2,7 +2,13 @@ package graft
 
 import graft.etl.StarSchema
 import graft.operators.{AsOfJoin, Corpus, RangeJoin}
-import org.apache.spark.sql.functions.col
+import graft.plans.GlobalPrefixExec
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, max, row_number, sum, when}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType,
+  StructField, StructType}
 import scala.util.Random
 
 /** Randomized equivalence: the scale-shaped operators must produce the
@@ -13,26 +19,89 @@ import scala.util.Random
 class PropertySpec extends SparkSpec {
   import spark.implicits._
 
+  /** The global prefix properties run over 5 uncoalesced range
+    * partitions, so the per-partition offsets really cross partitions.
+    */
+  private def spread[T](body: => T): T =
+    withConf("spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> "5")(body)
+
+  /** Unique keys `k` (long, or string when `strings`) with one NULL key,
+    * and int values `v` with about one NULL in six.
+    */
+  private def keyed(rnd: Random, strings: Boolean): DataFrame = {
+    val n = 1 + rnd.nextInt(200)
+    val keys: Seq[Option[Any]] = None +: (
+      if (strings) List.fill(n)(Some(rnd.alphanumeric.take(1 + rnd.nextInt(8)).mkString))
+      else List.fill(n)(Some(rnd.nextLong() % 1000000))).distinct
+    val rows = keys.map(k => Row(k.orNull,
+      if (rnd.nextInt(6) == 0) null else Integer.valueOf(rnd.nextInt(2001) - 1000)))
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), StructType(Seq(
+      StructField("k", if (strings) StringType else LongType),
+      StructField("v", IntegerType))))
+  }
+
+  /** Same rows, NULLs equal; returns the sizes of the node's input
+    * partitions, read back from its executed child.
+    */
+  private def sameAsTwin(got: DataFrame, twin: DataFrame): Seq[Long] = {
+    assert(got.exceptAll(twin).isEmpty && twin.exceptAll(got).isEmpty,
+      s"\n${got.orderBy("k").collect().toSeq}\n${twin.orderBy("k").collect().toSeq}")
+    got.collect()
+    val node = new AdaptiveSparkPlanHelper {}.collectFirst(
+      got.queryExecution.executedPlan) { case g: GlobalPrefixExec => g }
+    node.get.child.execute().mapPartitions(it => Iterator(it.size.toLong)).collect().toSeq
+  }
+
+  private val byK = Window.orderBy("k")
+  private def rankTwin(df: DataFrame): DataFrame =
+    df.withColumn("rank", row_number().over(byK).cast("long"))
+  private def sumTwin(df: DataFrame): DataFrame =
+    df.withColumn("cum", sum("v").over(byK.rowsBetween(
+      Window.unboundedPreceding, Window.currentRow)).cast("long"))
+  private def maxTwin(df: DataFrame): DataFrame =
+    df.withColumn("prev", max("v").over(byK.rowsBetween(Window.unboundedPreceding, -1)))
+
+  /** Trials over random inputs; at least one crosses 3 non-empty partitions. */
+  private def trials(seed: Int, strings: Boolean)(check: DataFrame => Seq[Long]): Unit = spread {
+    val rnd = new Random(seed)
+    val spreads = (1 to 8).map(_ => check(keyed(rnd, strings)).count(_ > 0))
+    assert(spreads.max >= 3, s"non-empty input partitions per trial: $spreads")
+  }
+
   test("globalRank == unpartitioned ROW_NUMBER for arbitrary numeric keys") {
-    val rnd = new Random(101)
-    for (trial <- 1 to 8) {
-      val keys = List.fill(1 + rnd.nextInt(200))(rnd.nextLong() % 1000000).distinct
-      val got = StarSchema.globalRank(keys.toDF("k"), Seq("k"), "rank", buckets = 7)
-        .select("k", "rank").as[(Long, Long)].collect().toMap
-      val want = keys.sorted.zipWithIndex.map { case (k, i) => k -> (i + 1L) }.toMap
-      assert(got == want, s"trial $trial")
-    }
+    trials(101, strings = false)(df =>
+      sameAsTwin(StarSchema.globalRank(df, Seq("k"), "rank"), rankTwin(df)))
   }
 
   test("globalRank == unpartitioned ROW_NUMBER for arbitrary string keys") {
-    val rnd = new Random(202)
-    for (trial <- 1 to 8) {
-      val keys = List.fill(1 + rnd.nextInt(150))(
-        rnd.alphanumeric.take(1 + rnd.nextInt(8)).mkString).distinct
-      val got = StarSchema.globalRank(keys.toDF("k"), Seq("k"), "rank")
-        .select("k", "rank").as[(String, Long)].collect().toMap
-      val want = keys.sorted.zipWithIndex.map { case (k, i) => k -> (i + 1L) }.toMap
-      assert(got == want, s"trial $trial")
+    trials(202, strings = true)(df =>
+      sameAsTwin(StarSchema.globalRank(df, Seq("k"), "rank"), rankTwin(df)))
+  }
+
+  test("globalPrefixSum == the windowed running sum, numeric and string keys") {
+    for (strings <- Seq(false, true)) trials(505, strings)(df =>
+      sameAsTwin(StarSchema.globalPrefixSum(df, Seq("k"), "v", "cum"), sumTwin(df)))
+  }
+
+  test("globalPrefixMax == the windowed prior max, numeric and string keys") {
+    for (strings <- Seq(false, true)) trials(606, strings)(df =>
+      sameAsTwin(StarSchema.globalPrefixMax(df, Seq("k"), "v", "prev"), maxTwin(df)))
+  }
+
+  test("global prefix offsets cross empty input partitions") {
+    // 12 ids in 16 slices: the range already arrives range-partitioned
+    // and sorted on k, so the node reads its slices as they are, four
+    // of them empty
+    val df = spark.range(0, 12, 1, 16).select(col("id").as("k"),
+      when(col("id") % 4 =!= 1, (col("id") * 7919 % 13 - 6).cast("int")).as("v"))
+    spread {
+      val sizes = Seq(
+        sameAsTwin(StarSchema.globalRank(df, Seq("k"), "rank"), rankTwin(df)),
+        sameAsTwin(StarSchema.globalPrefixSum(df, Seq("k"), "v", "cum"), sumTwin(df)),
+        sameAsTwin(StarSchema.globalPrefixMax(df, Seq("k"), "v", "prev"), maxTwin(df)))
+      sizes.foreach(s => assert(s.indexOf(0L) >= 0 &&
+        s.indexOf(0L) < s.lastIndexWhere(_ > 0), s"no interior empty slice: $s"))
     }
   }
 

@@ -9,6 +9,31 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
 
+  /** Runs `body` with the session confs `kv` set, then restores them. */
+  def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally saved.foreach { case (k, v) =>
+      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+  }
+
+  /** The Spark jobs that start while `body` runs. */
+  def jobsStartedBy(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    graft.core.GraftSession.drainListeners(spark)
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      body
+      graft.core.GraftSession.drainListeners(spark)
+    } finally spark.sparkContext.removeSparkListener(counter)
+    jobs.get
+  }
+
   /** Executes `df` and asserts no FILE scan in its plan reads a `text`
     * column — the shared audit for probe-an-index-not-the-corpus
     * operators (in-memory batch scans don't appear as ReadSchema).

@@ -69,7 +69,7 @@ class SamplingSpec extends SparkSpec {
     out.foreach(r => assert(r.getLong(2) < budget + maxDoc))
   }
 
-  test("globalPrefixSum equals the unpartitioned running sum, any bucket count") {
+  test("globalPrefixSum equals the unpartitioned running sum, any partition count") {
     val rnd = new scala.util.Random(42)
     import spark.implicits._
     val data = Seq.fill(500)((rnd.nextInt(100000), rnd.nextInt(50).toLong))
@@ -78,10 +78,12 @@ class SamplingSpec extends SparkSpec {
       .withColumn("cum", sum("v").over(Window.orderBy("k")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .orderBy("k").collect().map(r => (r.getInt(0), r.getLong(2))).toSeq
-    for (buckets <- Seq(1, 7, 64)) {
-      val got = StarSchema.globalPrefixSum(data, Seq("k"), "v", "cum", buckets)
+    for (parts <- Seq(1, 7, 64)) withConf(
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> parts.toString) {
+      val got = StarSchema.globalPrefixSum(data, Seq("k"), "v", "cum")
         .orderBy("k").collect().map(r => (r.getInt(0), r.getLong(2))).toSeq
-      assert(got == expected, s"buckets=$buckets")
+      assert(got == expected, s"partitions=$parts")
     }
   }
 

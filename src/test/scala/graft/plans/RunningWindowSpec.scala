@@ -105,22 +105,12 @@ class RunningWindowSpec extends SparkSpec {
 
   test("building the fact over its inputs plans only: no Spark job runs " +
        "before an action") {
-    // the inputs' own construction may run jobs (parquet schema reads,
-    // dim_location's rank pin); the window node itself must add none
+    // the inputs' own construction runs the parquet schema reads; the
+    // window node itself must add no job
     val staging = WeatherMart.staging(spark, sfDir)
     val dimLocation = WeatherMart.dimLocation(spark, sfDir)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val counter = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    graft.core.GraftSession.drainListeners(spark)
-    spark.sparkContext.addSparkListener(counter)
-    try {
-      WeatherMart.fact(staging, dimLocation)
-      graft.core.GraftSession.drainListeners(spark)
-    } finally spark.sparkContext.removeSparkListener(counter)
-    assert(jobs.get == 0, s"building the fact started ${jobs.get} job(s)")
+    val jobs = jobsStartedBy(WeatherMart.fact(staging, dimLocation))
+    assert(jobs == 0, s"building the fact started $jobs job(s)")
   }
 
   test("a fresh session plans the node, which counts its output rows") {

@@ -63,7 +63,7 @@ class CurationPipelineSpec extends SparkSpec {
     // short); D is an in-batch exact dup of A (drop)
     drop(landing, 1L -> docA, 2L -> docB, 3L -> docCShort, 4L -> docA)
     pipe.ingest(landing, schema, ckpt, out, statsDir = Some(s"$root/stats"))
-    val sink0 = spark.read.parquet(s"$out/batch=*")
+    val sink0 = spark.read.parquet(out)
     assert(sink0.select("doc_id").as[Long].collect().toSet == Set(1L, 2L))
     // the sink never stores raw PII: the email was scrubbed BEFORE
     // every downstream stage and the sentinel is what shipped
@@ -103,7 +103,7 @@ class CurationPipelineSpec extends SparkSpec {
 
     // drained re-run: no new files → no new batch, sink unchanged
     pipe.ingest(landing, schema, ckpt, out)
-    assert(spark.read.parquet(s"$out/batch=*").count() == 4)
+    assert(spark.read.parquet(out).count() == 4)
 
     // offline maintenance composes across all three indexes under the
     // stopped stream's commit-log proof...

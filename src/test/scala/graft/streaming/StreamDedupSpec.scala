@@ -131,7 +131,7 @@ class StreamDedupSpec extends SparkSpec {
       q.processAllAvailable()
     } finally q.stop()
 
-    val accepted = spark.read.parquet(s"$sink/batch=*")
+    val accepted = spark.read.parquet(sink)
       .select("doc_id").as[Long].collect().toSet
     assert(accepted == Set(11L, 14L), s"accepted $accepted")
 

@@ -25,7 +25,7 @@ class StreamSinkSpec extends SparkSpec {
       q.processAllAvailable()
       mem.addData((3L, 4.0))
       q.processAllAvailable()
-      val out = spark.read.parquet(s"$dir/batch=*")
+      val out = spark.read.parquet(dir)
       assert(out.count() == 3)
       assert(out.select("id").as[Long].collect().toSet == Set(1L, 2L, 3L))
       // simulate a replay of batch 0: re-delivering the same rows to the
@@ -35,7 +35,7 @@ class StreamSinkSpec extends SparkSpec {
         spark.createDataFrame(
           spark.sparkContext.parallelize(b0.collect().toSeq), b0.schema),
         0L)
-      assert(spark.read.parquet(s"$dir/batch=*").count() == 3)
+      assert(spark.read.parquet(dir).count() == 3)
     } finally q.stop()
   }
 
@@ -86,7 +86,7 @@ class StreamSinkSpec extends SparkSpec {
       spark, in, StructType.fromDDL("doc_id LONG, text STRING"), ckpt,
       (b, id) => StreamSink.idempotentParquet(out)(idx.scrub(b, id), id))
     def cleaned(): Map[Long, (String, Long)] =
-      spark.read.parquet(s"$out/batch=*").collect()
+      spark.read.parquet(out).collect()
         .map(r => r.getAs[Long]("doc_id") ->
           (r.getAs[String]("clean_text"), r.getAs[Long]("n_removed"))).toMap
 

@@ -35,7 +35,7 @@ class StreamSketchSpec extends SparkSpec {
 
     // rebind the persisted cells to their geometry, as a reader would
     val folded = Sketches.cmsMerge(Sketches.Cms(
-        spark.read.parquet(s"$dir/batch=*").select("row", "bucket", "cnt"),
+        spark.read.parquet(dir).select("row", "bucket", "cnt"),
         depth = 2, width = 64))
       .cells.collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap
     val onePass = Sketches.cmsSketch(all.toDF("item"), depth = 2, width = 64)
@@ -45,7 +45,7 @@ class StreamSketchSpec extends SparkSpec {
     // and the folded sketch answers point queries like the one-pass one
     val est = Sketches.cmsEstimate(
       Sketches.cmsMerge(Sketches.Cms(
-        spark.read.parquet(s"$dir/batch=*").select("row", "bucket", "cnt"),
+        spark.read.parquet(dir).select("row", "bucket", "cnt"),
         depth = 2, width = 64)),
       Seq("alpha", "delta", "absent").toDF("item"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
